@@ -63,17 +63,19 @@ class ParquetCatalog:
     def load(self, table: str) -> DataFrame:
         return self.spark.read.parquet(self.path(table))
 
-    def meta(self, table: str) -> TableMeta:
-        """Introspect (S2 analogue): schema from parquet footer, size from fs."""
-        df = self.load(table)
-        p = self.path(table)
-        size = _path_size(p)
+    def meta(self, table: str, df: DataFrame | None = None) -> TableMeta:
+        """Introspect (S2 analogue): schema from parquet footer, size from fs.
+
+        Pass the ``df`` already loaded for ``table`` to reuse its schema;
+        each ``load`` runs a schema-inference job.
+        """
+        schema = (df if df is not None else self.load(table)).schema
         return meta_from_dataframe(
             self.db_name,
             table,
-            df.schema,
+            schema,
             primary_key=TESTDATA_PRIMARY_KEYS.get(table, []),
-            size_bytes=size,
+            size_bytes=_path_size(self.path(table)),
         )
 
     def load_all(self, excludes: list[str] | None = None) -> dict[str, DataFrame]:

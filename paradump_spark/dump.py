@@ -72,7 +72,7 @@ def dump_tables(
     results: list[DumpResult] = []
     for name in names:
         df = catalog.load(name)
-        meta = catalog.meta(name)
+        meta = catalog.meta(name, df)
         path: str | None = os.path.join(out_dir, name)
         if options.mode == "sql":
             write_sql_inserts(
