@@ -276,8 +276,7 @@ def main() -> None:
 
     # corpus×corpus kNN-join at the APPROXIMATE (cell-pruned) budget —
     # the 100 TB path; full-probe exactness is oracle/pytest territory.
-    # scoring="arrow" is the corpus-scale kernel (round 9; pytest-equal
-    # to the oracle-proven jvm path).  num_cells=None is the operator's
+    # num_cells=None is the operator's
     # scale-safe DEFAULT (round 10, VERDICT r09 directive 1): constant-
     # occupancy cells (~128 rows/cell) derived from right_count, going
     # TWO-LEVEL beyond KNN_TWO_LEVEL_CELLS=512 cells — so the benched
@@ -292,8 +291,7 @@ def main() -> None:
     times["knn_join_nprobe4"] = bench(
         lambda: SIM.knn_join(
             emb, emb, "vec_id", "embedding", k=5,
-            nprobe=4, exclude_self=True, scoring="arrow",
-            right_count=n_emb,
+            nprobe=4, exclude_self=True, right_count=n_emb,
         ).count()
     )
 

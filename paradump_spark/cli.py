@@ -271,12 +271,6 @@ def build_parser() -> argparse.ArgumentParser:
                          "two-level path (= coarse-cells for exact; "
                          "0 = auto: max(4, sqrt(nprobe)) so the coarse "
                          "breadth tracks the search budget)")
-    kn.add_argument("--scoring", choices=["jvm", "arrow"], default="arrow",
-                    help="pair-scoring kernel: arrow = cogrouped numpy "
-                         "matmul + in-kernel per-cell top-k (the "
-                         "corpus-scale path, ~25x); jvm = pure-Catalyst "
-                         "HOF dot (bit-sequential arithmetic). "
-                         "Result-equal (pytest-asserted)")
     kn.add_argument("--output", required=True, help="parquet output")
 
     rp = sub.add_parser(
@@ -749,7 +743,6 @@ def main(argv: list[str] | None = None) -> int:
             out = knn_graph_clusters(
                 left, args.id_col, args.vec_col, args.threshold,
                 k=args.k, num_cells=args.num_cells or None, nprobe=nprobe,
-                scoring=args.scoring,
                 coarse_cells=args.coarse_cells or None,
                 coarse_probe=args.coarse_probe or None,
             )
@@ -768,7 +761,6 @@ def main(argv: list[str] | None = None) -> int:
             left, right, args.id_col, args.vec_col, k=args.k,
             num_cells=args.num_cells or None, nprobe=nprobe,
             exclude_self=args.right_table is None,
-            scoring=args.scoring,
             coarse_cells=args.coarse_cells or None,
             coarse_probe=args.coarse_probe or None,
         )

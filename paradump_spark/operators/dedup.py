@@ -779,6 +779,10 @@ def connected_components(
     stars_count = None  # cached |stars| — saves one count job per round
     for rounds in range(1, max_iter + 1):
         sym = _large_star(sym).localCheckpoint(eager=True)
+        if rounds == 1:
+            # all_ids and round 1's large-star are checkpointed: nothing
+            # reads the cached edge pin any more, release its blocks
+            pair.unpersist()
         new_stars = _small_star_directed(sym).localCheckpoint(eager=True)
         sym = new_stars.selectExpr("a AS src", "b AS dst").unionAll(
             new_stars.selectExpr("b AS src", "a AS dst")

@@ -51,10 +51,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from ..functions import vectors as V
 from ..plans.topk import partial_topk
-from .similarity import ivf_assign, ivf_centroids, kmeans_refine
+from .similarity import _top_p_cogroup, ivf_assign, ivf_centroids, kmeans_refine
 
 
 def assign_clusters(
@@ -79,93 +80,31 @@ def assign_clusters(
 
 
 def _fine_assign(
-    coarse_assigned: DataFrame,
-    fine: DataFrame,
-    vec_col: str,
-    method: str = "auto",
-) -> DataFrame:
-    """Assign each row to the nearest FINE centroid of its own coarse
-    cell (≈ k/√k candidate comparisons per row).
-
-    ``method="arrow"`` (the ``auto`` default when numpy imports) is a
-    COGROUPED Arrow kernel: corpus and fine centroids co-group on
-    ``cell_id`` and each cell's batch is one numpy ``(B×d) @ (d×k_c)``
-    matmul + argmax.  This is the scale shape — one corpus shuffle on
-    the cell key, per-cell centroid sets only (never a k-sized
-    broadcast or driver collect), vectorized math.  The interpreted
-    expression path (``"jvm"``: per-cell struct lists + HOF argmax —
-    Spark evaluates HOFs without codegen) measured 7 s per pass at
-    20k×17×64 vs <1 s for the kernel.  Ties break to the lowest
-    cluster_id on both paths (numpy argmax keeps the first maximum of
-    the cluster_id-sorted candidates).
-    """
-    if method == "auto":
-        try:
-            import numpy  # noqa: F401
-
-            method = "arrow"
-        except Exception:
-            method = "jvm"
-    if method == "arrow":
-        return _fine_assign_arrow(coarse_assigned, fine, vec_col)
-    fine_by_cell = fine.groupBy("cell_id").agg(
-        F.collect_list(F.struct("cluster_id", "centroid")).alias("__fc")
-    )
-    joined = coarse_assigned.join(fine_by_cell, "cell_id")
-    best = F.array_max(
-        F.transform(
-            F.col("__fc"),
-            lambda fc: F.struct(
-                V.cosine(F.col(vec_col), fc["centroid"]).alias("cos"),
-                (-fc["cluster_id"]).alias("neg_id"),
-            ),
-        )
-    )
-    return joined.withColumn(
-        "cluster_id", (-best["neg_id"]).cast("bigint")
-    ).drop("__fc")
-
-
-def _fine_assign_arrow(
     coarse_assigned: DataFrame, fine: DataFrame, vec_col: str
 ) -> DataFrame:
-    """Cogrouped numpy nearest-fine-centroid labeling (see
-    :func:`_fine_assign`)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import LongType, StructField, StructType
+    """Assign each row to the nearest FINE centroid of its own coarse
+    cell (≈ k/√k candidate comparisons per row): input columns +
+    ``cluster_id``, ties to the lowest cluster_id.
 
-    out_schema = StructType(
+    The cogrouped form of the `similarity.top_p` kernel: corpus and fine
+    centroids co-group on ``cell_id`` and each cell's batch is one numpy
+    ``(B×d) @ (d×k_c)`` matmul + argmax.  This is the scale shape — one
+    corpus shuffle on the cell key, per-cell centroid sets only (never a
+    k-sized broadcast or driver collect).  A row whose cell has no fine
+    centroid gets a NULL ``cluster_id`` — unreachable by construction
+    (every non-empty cell gets >= 1 fine centroid), never silent.
+    """
+    schema = StructType(
         list(coarse_assigned.schema.fields)
         + [StructField("cluster_id", LongType())]
     )
 
-    def label(left: "pd.DataFrame", right: "pd.DataFrame") -> "pd.DataFrame":
-        left = left.copy()
-        if left.empty:
-            left["cluster_id"] = pd.Series(dtype="int64")
-            return left
-        if right.empty:
-            # unreachable by construction (every non-empty cell gets
-            # >= 1 fine centroid); conservative sentinel, never silent
-            left["cluster_id"] = np.int64(-1)
-            return left
-        ids = right["cluster_id"].to_numpy(dtype=np.int64)
-        order = np.argsort(ids, kind="stable")
-        ids = ids[order]
-        C = np.array(right["centroid"].tolist(), dtype=np.float64)[order]
-        cn = np.linalg.norm(C, axis=1, keepdims=True)
-        Cn = C / np.where(cn == 0.0, 1.0, cn)
-        X = np.array(left[vec_col].tolist(), dtype=np.float64)
-        n = np.linalg.norm(X, axis=1, keepdims=True)
-        Xn = X / np.where(n == 0.0, 1.0, n)
-        left["cluster_id"] = ids[np.argmax(Xn @ Cn.T, axis=1)]
-        return left
+    def label(lpdf, ids, _score):
+        return lpdf.assign(cluster_id=ids[:, 0] if ids.shape[1] else None)
 
-    return (
-        coarse_assigned.groupBy("cell_id")
-        .cogroup(fine.groupBy("cell_id"))
-        .applyInPandas(label, schema=out_schema)
+    return _top_p_cogroup(
+        coarse_assigned, fine, vec_col, "cluster_id", "centroid", 1,
+        schema, label,
     )
 
 

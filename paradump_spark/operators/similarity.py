@@ -7,24 +7,38 @@ Beyond-reference surface.  Two physical strategies:
   all when the query side broadcasts; the only wide op is the per-query
   top-k, which aggregates map-side.  This is the exact baseline.
 * **IVF (inverted-file) top-k** — coarse-quantize the corpus to the
-  nearest of C deterministic sampled centroids (one broadcast join), then
-  search only the ``nprobe`` closest cells per query.  At 100 TB the
-  corpus scan becomes a partition-pruned read of ~nprobe/C of the data if
-  the corpus table is written bucketed/partitioned by cell id.
+  nearest of C deterministic sampled centroids (map-side: the centroid
+  table ships with the kernel), then search only the ``nprobe`` closest
+  cells per query.  At 100 TB the corpus scan becomes a partition-pruned
+  read of ~nprobe/C of the data if the corpus table is written
+  bucketed/partitioned by cell id.
+
+Every nearest-centroid and per-cell scoring step runs through one numpy
+kernel, :func:`top_p`, in a map-side and a cogrouped form;
+:func:`brute_force_topk` stays pure JVM as the reference it is checked
+against.
 """
 
 from __future__ import annotations
 
+import logging
+
+import numpy as np
+
 # module-top so the pandas_udf type hints ("pd.Series" strings under
 # PEP 563) resolve from this module's globals at decoration time
-import pandas as pd  # noqa: F401
+import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from paradump_spark.functions import vectors as V
 from paradump_spark.operators.dedup import spread
 from paradump_spark.plans.topk import partial_topk
+
+log = logging.getLogger("paradump_spark")
 
 
 def brute_force_topk(
@@ -180,8 +194,6 @@ def _kmeans_refine_sampled(
     """Driver-side spherical k-means over a bounded hash-random sample
     (see :func:`kmeans_refine`).  One Spark job (TakeOrderedAndProject to
     fetch the sample) regardless of ``iters``."""
-    import numpy as np
-
     key = F.md5(F.concat(F.lit(f"train{seed}|"), F.col(id_col).cast("string")))
     rows = (
         corpus.select(F.col(vec_col).alias("v"), key.alias("__k"))
@@ -192,21 +204,15 @@ def _kmeans_refine_sampled(
     cents = sorted(centroids.collect(), key=lambda r: r["cell_id"])
     cell_ids = [r["cell_id"] for r in cents]
     C = np.array([r["centroid"] for r in cents], dtype=np.float64)
-    X = np.array([r["v"] for r in rows], dtype=np.float64)
-
-    def unit(m: "np.ndarray") -> "np.ndarray":
-        n = np.linalg.norm(m, axis=1, keepdims=True)
-        return m / np.where(n == 0.0, 1.0, n)
-
-    Xn = unit(X)
+    Xn = _unit(np.array([r["v"] for r in rows], dtype=np.float64))
     for _ in range(iters):
-        # argmax of cosine; np.argmax breaks ties to the lowest cell_id,
-        # matching the distributed argmax's (cos, -cell_id) ordering
-        assign = np.argmax(Xn @ unit(C).T, axis=1)
+        # nearest cell by top_p: ties break to the lowest cell_id, the
+        # same order as the distributed assignment
+        assign = top_p(Xn, _unit(C), 1)[0][:, 0]
         for j in range(len(cell_ids)):
             members = Xn[assign == j]
             if len(members):  # empty cell keeps its previous centroid VERBATIM
-                C[j] = unit(members.mean(axis=0, keepdims=True))[0]
+                C[j] = _unit(members.mean(axis=0, keepdims=True))[0]
     spark = corpus.sparkSession
     return spark.createDataFrame(
         [(int(cid), [float(x) for x in C[j]]) for j, cid in enumerate(cell_ids)],
@@ -214,125 +220,178 @@ def _kmeans_refine_sampled(
     )
 
 
+def _unit(m: np.ndarray) -> np.ndarray:
+    """Row-normalized copy of ``m``; zero rows stay zero (the
+    ``V.normalized`` convention)."""
+    n = np.linalg.norm(m, axis=1, keepdims=True)
+    return m / np.where(n == 0.0, 1.0, n)
+
+
+def _stack(vs: pd.Series) -> np.ndarray:
+    """An Arrow ``array<float>`` column batch as a float64 matrix."""
+    return np.array(vs.tolist(), dtype=np.float64)
+
+
+def top_p(
+    X: np.ndarray, C: np.ndarray, p: int, exclude: np.ndarray | None = None
+) -> tuple[np.ndarray, np.ndarray]:
+    """The nearest-centroid / per-cell scoring step every kernel in this
+    package shares: for each unit row of ``X``, the ``p`` unit rows of
+    ``C`` with the highest cosine, ordered by (cosine desc, row index
+    asc).  Callers sort ``C`` by id, so index order is id order and the
+    tie-break is the lowest id — the order of :func:`brute_force_topk`.
+
+    Returns ``(order, score)``, two ``len(X) × min(p, len(C))`` arrays:
+    row indices into ``C`` and their cosines.  ``p == 1`` is an argmax
+    (numpy keeps the FIRST maximum); otherwise a stable argsort of the
+    negated scores keeps equal scores in index order.  ``exclude``
+    (boolean, ``len(X) × len(C)``) marks pairs that must not be
+    returned: they score ``-inf``, sort last, and the caller drops them
+    with ``np.isfinite(score)``.  The matmul sums in a different order
+    than the JVM's left fold, so scores can differ from
+    :func:`brute_force_topk` in the last bits; the oracle comparisons
+    round to 6 decimals.
+    """
+    S = X @ C.T
+    if exclude is not None:
+        S[exclude] = -np.inf
+    if p == 1:
+        order = np.argmax(S, axis=1)[:, None]
+    else:
+        order = np.argsort(-S, axis=1, kind="stable")[:, :p]
+    return order, np.take_along_axis(S, order, axis=1)
+
+
+def _top_p_map(df: DataFrame, rows, vec_col: str, p: int) -> DataFrame:
+    """Map-side form of the :func:`top_p` kernel: ``df`` + ``cell_id``,
+    each row's ``p`` nearest of the collected centroid ``rows``
+    ((cell_id, centroid) Rows, bounded by the cell count).  The table is
+    normalized once on the driver and ships in the UDF closure; each
+    Arrow batch is one matmul.  No shuffle.
+
+    ``p == 1`` labels every row (``cell_id`` NULL when there is no
+    centroid); ``p > 1`` replicates each row once per cell (no rows when
+    there is no centroid).  NULL centroids are skipped.
+    """
+    rows = sorted(
+        (r for r in rows if r["centroid"] is not None),
+        key=lambda r: int(r["cell_id"]),
+    )
+    if not rows:
+        out = df.withColumn("cell_id", F.lit(None).cast("int"))
+        return out if p == 1 else out.where(F.lit(False))
+    ids = np.array([int(r["cell_id"]) for r in rows], dtype=np.int32)
+    C = _unit(np.array([r["centroid"] for r in rows], dtype=np.float64))
+
+    @pandas_udf("int" if p == 1 else "array<int>")
+    def cells(vs: pd.Series) -> pd.Series:
+        if not len(vs):
+            return pd.Series([], dtype="int32" if p == 1 else object)
+        top = ids[top_p(_unit(_stack(vs)), C, p)[0]]
+        return pd.Series(top[:, 0] if p == 1 else list(top))
+
+    # The kernel IS deterministic — the marking exists to stop Catalyst
+    # from re-evaluating it: constraint inference on a downstream join
+    # key (isnotnull(cell_id)), or InferFiltersFromGenerate's
+    # `size(cells) > 0` below the explode, otherwise pushes an inferred
+    # filter that REFERENCES the UDF below the projection, planning a
+    # second ArrowEvalPython per row (observed in the round-9 kNN plan:
+    # every corpus row paid the centroid matmul twice).
+    # Nondeterministic expressions cannot be duplicated or pushed
+    # through, which is exactly the barrier wanted; values are unchanged.
+    label = cells.asNondeterministic()(F.col(vec_col))
+    if p == 1:
+        return df.withColumn("cell_id", label)
+    return (
+        df.withColumn("__pcs", label)
+        .select("*", F.explode("__pcs").alias("cell_id"))
+        .drop("__pcs")
+    )
+
+
+def _top_p_cogroup(
+    left: DataFrame,
+    right: DataFrame,
+    left_vec: str,
+    right_id: str,
+    right_vec: str,
+    p: int,
+    schema,
+    emit,
+    exclude_key: str | None = None,
+) -> DataFrame:
+    """Cogrouped form of the :func:`top_p` kernel: ``left`` and
+    ``right`` meet on ``cell_id`` (one shuffle on the cell key, never a
+    broadcast of the right side) and each left row gets its ``p`` best
+    right rows of the same cell, ranked by (cosine desc, ``right_id``
+    asc).  Both vector columns are normalized in the kernel.
+
+    ``emit(lpdf, ids, score)`` turns a cell's left rows and their
+    ``len(lpdf) × p`` right ids and cosines into output rows of
+    ``schema``; a cell with no right rows passes zero-width arrays.
+    ``exclude_key`` names a left column whose value must not be paired
+    with an equal ``right_id`` (a self-join's own row).
+    """
+
+    def kernel(_key, lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
+        if not len(lpdf):
+            return pd.DataFrame()
+        if not len(rpdf):
+            none = np.empty((len(lpdf), 0), dtype=object)
+            return emit(lpdf, none, np.empty((len(lpdf), 0)))
+        rpdf = rpdf.sort_values(right_id, kind="mergesort")
+        rids = rpdf[right_id].to_numpy()
+        exclude = None
+        if exclude_key is not None:
+            exclude = lpdf[exclude_key].to_numpy()[:, None] == rids[None, :]
+        order, score = top_p(
+            _unit(_stack(lpdf[left_vec])), _unit(_stack(rpdf[right_vec])),
+            p, exclude,
+        )
+        return emit(lpdf, rids[order], score)
+
+    return (
+        left.groupBy("cell_id")
+        .cogroup(right.groupBy("cell_id"))
+        .applyInPandas(kernel, schema)
+    )
+
+
+def _emit_pairs(key: str, rid: str, score: str):
+    """``emit`` for :func:`_top_p_cogroup` giving narrow
+    (``key``, ``rid``, ``score``) rows: one per left row and kept right
+    row, excluded pairs dropped."""
+
+    def emit(lpdf, ids, scores):
+        keep = np.isfinite(scores).ravel()
+        return pd.DataFrame(
+            {
+                key: np.repeat(lpdf[key].to_numpy(), ids.shape[1])[keep],
+                rid: ids.ravel()[keep],
+                score: scores.ravel()[keep],
+            }
+        )
+
+    return emit
+
+
 def ivf_assign(
     corpus: DataFrame,
     centroids: DataFrame,
     id_col: str,
     vec_col: str,
-    method: str = "auto",
 ) -> DataFrame:
-    """Assign every corpus vector to its nearest centroid cell.
+    """Assign every corpus vector to its nearest centroid cell: corpus
+    columns + ``cell_id`` (int), ties to the LOWEST cell_id.
 
-    Map-only either way (no corpus shuffle); output: corpus columns +
-    cell_id.  Writing the result partitioned by cell_id turns later
-    probes into partition-pruned scans.  Ties break to the LOWEST
-    cell_id on both paths.
-
-    ``method``:
-
-    * ``"arrow"`` — vectorized numpy argmax in an Arrow-batched
-      pandas_udf: the (tiny) centroid matrix ships in the UDF closure
-      and each batch is one ``(B×d) @ (d×k)`` float64 matmul.  Spark
-      evaluates higher-order functions WITHOUT codegen (CodegenFallback:
-      nested aggregate/zip_with run interpreted, per element, boxed),
-      so this measures ~15× the expression path at sf1 (6.5 s → 0.45 s
-      for 20k×18×64).  Summation order differs from the JVM fold, so a
-      near-exact tie between two cells can land differently — harmless
-      for an IVF/clustering label, but bit-auditing oracles should pin
-      ``method="jvm"``.
-    * ``"jvm"`` — pure-expression argmax: no Python stage in the plan
-      (streaming twins and no-Python plan audits need this).
-    * ``"auto"`` — ``arrow`` when the per-row work is big enough to
-      amortize the Arrow hop (cells × dims ≥ 512) and numpy imports,
-      else ``jvm``.
+    The centroid table is collected once (bounded by the cell count) and
+    the map-side :func:`top_p` kernel labels each Arrow batch with one
+    numpy matmul + argmax — map-only, no corpus shuffle.  Writing the
+    result partitioned by cell_id turns later probes into
+    partition-pruned scans.  An empty (or all-NULL) centroid table gives
+    a NULL ``cell_id`` on every row.
     """
-    if method == "auto":
-        # one bounded collect (≤ num_cells rows) decides the path AND
-        # feeds the arrow kernel — the old count()+first() pair was two
-        # extra driver jobs and raised TypeError on an empty centroid
-        # table (ADVICE r07); empty/NULL centroids now degrade to the
-        # JVM path like before the auto mode existed
-        try:
-            import numpy  # noqa: F401
-
-            rows = centroids.collect()
-            if rows and rows[0]["centroid"] is not None:
-                k_d = len(rows) * len(rows[0]["centroid"])
-                if k_d >= 512:
-                    return _ivf_assign_arrow(
-                        corpus, centroids, vec_col, _rows=rows
-                    )
-            method = "jvm"
-        except Exception:
-            method = "jvm"
-    if method == "arrow":
-        return _ivf_assign_arrow(corpus, centroids, vec_col)
-    cents = F.broadcast(
-        centroids.groupBy().agg(
-            F.collect_list(F.struct("cell_id", "centroid")).alias("__cells")
-        )
-    )
-    with_cells = corpus.crossJoin(cents)
-    best = F.array_max(
-        F.transform(
-            F.col("__cells"),
-            lambda cc: F.struct(
-                V.cosine(F.col(vec_col), cc["centroid"]).alias("cos"),
-                (-cc["cell_id"]).alias("neg_cell"),
-            ),
-        )
-    )
-    return with_cells.withColumn("cell_id", (-best["neg_cell"]).cast("int")).drop(
-        "__cells"
-    )
-
-
-def _ivf_assign_arrow(
-    corpus: DataFrame, centroids: DataFrame, vec_col: str, _rows=None
-) -> DataFrame:
-    """Arrow-vectorized nearest-centroid labeling (see :func:`ivf_assign`).
-
-    The centroid table is collected once (it is bounded by num_cells —
-    the same rows every call site already broadcasts; ``_rows`` lets the
-    auto path reuse its probe collect instead of re-running the job) and
-    normalized on the driver; workers do one matmul + argmax per Arrow
-    batch.  numpy ``argmax`` returns the FIRST maximum and the rows are
-    sorted by cell_id, so ties break to the lowest cell_id like the JVM
-    path.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    rows = sorted(
-        centroids.collect() if _rows is None else _rows,
-        key=lambda r: int(r["cell_id"]),
-    )
-    ids = np.array([int(r["cell_id"]) for r in rows], dtype=np.int64)
-    C = np.array([r["centroid"] for r in rows], dtype=np.float64)
-    cn = np.linalg.norm(C, axis=1, keepdims=True)
-    Cn = C / np.where(cn == 0.0, 1.0, cn)
-
-    @pandas_udf("int")
-    def _nearest(vs: pd.Series) -> pd.Series:
-        if not len(vs):
-            return pd.Series([], dtype="int32")
-        X = np.array(vs.tolist(), dtype=np.float64)
-        n = np.linalg.norm(X, axis=1, keepdims=True)
-        Xn = X / np.where(n == 0.0, 1.0, n)
-        return pd.Series(ids[np.argmax(Xn @ Cn.T, axis=1)].astype(np.int32))
-
-    # The kernel IS deterministic — the marking exists to stop Catalyst
-    # from re-evaluating it: constraint inference on a downstream join
-    # key (isnotnull(cell_id)) otherwise pushes an inferred filter that
-    # REFERENCES the UDF below the projection, planning a second
-    # ArrowEvalPython per row (observed in the round-9 kNN plan: every
-    # corpus row paid the centroid matmul twice).  Nondeterministic
-    # expressions cannot be duplicated or pushed through, which is
-    # exactly the barrier wanted; values are unchanged.
-    return corpus.withColumn(
-        "cell_id", _nearest.asNondeterministic()(F.col(vec_col))
-    )
+    return _top_p_map(corpus, centroids.collect(), vec_col, 1)
 
 
 def ivf_build_index(
@@ -969,94 +1028,17 @@ def probe_cells(
     centroids: DataFrame,
     vec_col: str,
     nprobe: int,
-    method: str = "auto",
 ) -> DataFrame:
     """Each input row replicated once per its ``nprobe`` nearest cells:
     input columns + ``cell_id``.  The left-side expansion of
     :func:`knn_join` (and reusable for any batched multi-probe).
 
-    ``auto`` mirrors :func:`ivf_assign`: the Arrow numpy path (top-nprobe
-    via one matmul + argpartition per batch) when cells × dims ≥ 512,
-    else a JVM sort-slice-posexplode expression.  Ties break to the
-    lowest cell_id on both paths.
+    Same kernel as :func:`ivf_assign` with p = ``nprobe``: one collect of
+    the centroid table, then per Arrow batch one matmul + stable top-p
+    (ties to the lowest cell_id).  An empty (or all-NULL) centroid table
+    gives no rows.
     """
-    if method == "auto":
-        try:
-            import numpy  # noqa: F401
-
-            rows = centroids.collect()
-            if rows and rows[0]["centroid"] is not None:
-                if len(rows) * len(rows[0]["centroid"]) >= 512:
-                    return _probe_cells_arrow(df, vec_col, nprobe, rows)
-            method = "jvm"
-        except Exception:
-            method = "jvm"
-    if method == "arrow":
-        return _probe_cells_arrow(df, vec_col, nprobe, centroids.collect())
-    cents = F.broadcast(
-        centroids.groupBy().agg(
-            F.collect_list(F.struct("cell_id", "centroid")).alias("__cells")
-        )
-    )
-    ranked = F.slice(
-        F.array_sort(
-            F.transform(
-                F.col("__cells"),
-                lambda cc: F.struct(
-                    (-V.cosine(F.col(vec_col), cc["centroid"])).alias("negcos"),
-                    cc["cell_id"].alias("cell_id"),
-                ),
-            )
-        ),
-        1,
-        nprobe,
-    )
-    return (
-        df.crossJoin(cents)
-        .select("*", F.explode(ranked).alias("__pc"))
-        .withColumn("cell_id", F.col("__pc")["cell_id"])
-        .drop("__cells", "__pc")
-    )
-
-
-def _probe_cells_arrow(
-    df: DataFrame, vec_col: str, nprobe: int, rows
-) -> DataFrame:
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    rows = sorted(rows, key=lambda r: int(r["cell_id"]))
-    ids = np.array([int(r["cell_id"]) for r in rows], dtype=np.int64)
-    C = np.array([r["centroid"] for r in rows], dtype=np.float64)
-    cn = np.linalg.norm(C, axis=1, keepdims=True)
-    Cn = C / np.where(cn == 0.0, 1.0, cn)
-    p = min(nprobe, len(ids))
-
-    @pandas_udf("array<int>")
-    def _cells(vs: pd.Series) -> pd.Series:
-        if not len(vs):
-            return pd.Series([], dtype=object)
-        X = np.array(vs.tolist(), dtype=np.float64)
-        n = np.linalg.norm(X, axis=1, keepdims=True)
-        Xn = X / np.where(n == 0.0, 1.0, n)
-        S = Xn @ Cn.T
-        # top-p by (cos desc, cell_id asc): argsort on (-cos, id-order)
-        # — ids are sorted ascending so stable argsort of -S ties to the
-        # lowest cell_id, matching the JVM struct-sort order
-        order = np.argsort(-S, axis=1, kind="stable")[:, :p]
-        return pd.Series([ids[r].astype(np.int32).tolist() for r in order])
-
-    # asNondeterministic for the same reason as _ivf_assign_arrow:
-    # InferFiltersFromGenerate adds `size(__pcs) > 0 AND isnotnull`
-    # below the explode, re-evaluating the Arrow kernel a second time
-    # per row (observed in the round-9 kNN plan); the barrier keeps one
-    # evaluation, values unchanged (_cells never returns null/empty).
-    return (
-        df.withColumn("__pcs", _cells.asNondeterministic()(F.col(vec_col)))
-        .select("*", F.explode("__pcs").alias("cell_id"))
-        .drop("__pcs")
-    )
+    return _top_p_map(df, centroids.collect(), vec_col, nprobe)
 
 
 # Scale-safe knn_join defaults (VERDICT r09 directive 1): cells grow
@@ -1087,7 +1069,6 @@ def knn_join(
     seed: int = 42,
     right_count: int | None = None,
     index_meta_path: str | None = None,
-    scoring: str = "jvm",
     coarse_cells: int | None = None,
     coarse_probe: int | None = None,
 ) -> DataFrame:
@@ -1099,14 +1080,17 @@ def knn_join(
     a batch; here both sides may be the full corpus (the self kNN-graph
     that graph clustering / connected-component dedup consumes — pass
     the same frame twice with ``exclude_self=True``).  Plan: centroids
-    train on the right (sampled, driver-bounded); the right side assigns
-    to its one nearest cell, the left replicates to its ``nprobe``
-    nearest cells (:func:`probe_cells`); ONE shuffle equi-join on
-    cell_id generates candidates cell-locally; per-query top-k goes
-    through the skew-safe `plans.topk.partial_topk` cut before the final
-    ranking window.  No cartesian anywhere; at ``nprobe == num_cells``
-    the result is EXACT (every cell probed — equals brute force, test-
-    asserted).
+    train on the right (sampled, driver-bounded, collected ONCE for both
+    sides); the right side assigns to its one nearest cell, the left
+    replicates to its ``nprobe`` nearest cells (the :func:`ivf_assign` /
+    :func:`probe_cells` kernel); ONE cogroup on cell_id scores each cell
+    with the :func:`top_p` kernel (one numpy matmul, per-query top-k
+    inside the kernel, so at most k rows per (query, probed cell) leave
+    it); per-query top-k then goes through the skew-safe
+    `plans.topk.partial_topk` cut before the final ranking window.  No
+    cartesian anywhere; at ``nprobe == num_cells`` the result is EXACT
+    (every cell probed — equals :func:`brute_force_topk`, the JVM
+    reference, test-asserted).
 
     ``num_cells=None`` (the DEFAULT) derives a constant-occupancy cell
     count (``ceil(N / KNN_CELL_OCCUPANCY)``, ~128 rows/cell) from the
@@ -1129,17 +1113,6 @@ def knn_join(
     findable iff it sits in one of its query's probed cells — the same
     contract as :func:`ivf_topk`, recall rises with nprobe.
 
-    ``scoring``: ``"jvm"`` (default) scores candidate pairs with the
-    Catalyst HOF dot — pure-JVM plan, bit-sequential arithmetic, the
-    formulation every DuckDB oracle reproduces.  ``"arrow"`` scores
-    each cell with a cogrouped numpy kernel (one matmul + per-query
-    per-cell top-k inside the kernel, ties broken identically), which
-    ALSO shrinks the ranking input from |cell| to ≤ k rows per
-    (query, probed cell) — measured ~25-30x on a 100k self-join; the
-    path a corpus-scale run uses.  Same pair set, same ordering; only
-    the float summation order differs (pytest asserts frame equality
-    on the test corpora).
-
     ``coarse_cells``: switch to TWO-LEVEL (hierarchical) cells — the
     production configuration beyond ~10⁵ cells, where the FLAT assign
     term (N × num_cells × d) itself becomes the quadratic at constant
@@ -1147,8 +1120,8 @@ def knn_join(
     SF1_LEDGER's knn_scaled section).  The right side assigns through
     `semdedup.two_level_cells` (coarse √cells argmax, then a per-cell
     fine kernel: O(N·√cells·d) total); queries probe ``coarse_probe``
-    coarse cells, rank the fine centroids inside them (cogrouped
-    kernel, per-coarse top-``nprobe``), and keep the global
+    coarse cells, rank the fine centroids inside them (the cogrouped
+    :func:`top_p` kernel, per-coarse top-``nprobe``), and keep the global
     top-``nprobe`` fine cells via the skew-safe partial_topk cut.  At
     ``coarse_probe == coarse_cells`` and ``nprobe == num_cells`` every
     fine cell is probed — EXACT (test-asserted equal to the flat exact
@@ -1160,14 +1133,27 @@ def knn_join(
     balanced two-level probing, so the coarse breadth grows with the
     search budget instead of silently capping recall when a derived
     ``nprobe`` scales with the corpus.
+
+    The geometry decision (flat or two-level, where ``right_count`` came
+    from, and which of ``num_cells`` / ``coarse_cells`` / ``nprobe`` /
+    ``coarse_probe`` were passed or derived) is logged once at INFO on
+    the ``paradump_spark`` logger, with the inputs as a dict in
+    ``record.args``.
     """
     lid = left_id_col or id_col
     rid = right_id_col or id_col
+    passed = {
+        "num_cells": num_cells, "coarse_cells": coarse_cells,
+        "nprobe": nprobe, "coarse_probe": coarse_probe,
+    }
+    count_from = "passed" if right_count is not None else "not needed"
     if num_cells is None or nprobe is None:
         if right_count is None and index_meta_path is not None:
             right_count = index_row_count(right.sparkSession, index_meta_path)
+            count_from = "index meta"
         if right_count is None:
             right_count = right.count()
+            count_from = "count()"
     if num_cells is None:
         # constant-occupancy derivation (see KNN_CELL_OCCUPANCY above);
         # coarse_cells=None means AUTO here (two-level beyond the
@@ -1187,6 +1173,7 @@ def knn_join(
         # the measured small-corpus behavior (SF1_LEDGER two_level_recall:
         # cp4 recovers most of the cp2 recall gap at nprobe 4-16).
         coarse_probe = max(4, round(nprobe ** 0.5))
+    fine = None
     if coarse_cells:
         from paradump_spark.operators.semdedup import two_level_cells
 
@@ -1196,27 +1183,59 @@ def knn_join(
             refine_iters=refine_iters, fine_refine_iters=1, seed=seed,
         )
         fine = None if fine is None else fine.localCheckpoint(eager=True)
-    else:
-        fine = None
+    chosen = {
+        "num_cells": num_cells, "coarse_cells": coarse_cells or 0,
+        "nprobe": nprobe, "coarse_probe": coarse_probe,
+    }
+    log.info(
+        "knn_join %(path)s: num_cells=%(num_cells)s (%(num_cells_from)s), "
+        "coarse_cells=%(coarse_cells)s (%(coarse_cells_from)s), "
+        "nprobe=%(nprobe)s (%(nprobe_from)s), "
+        "coarse_probe=%(coarse_probe)s (%(coarse_probe_from)s), "
+        "right_count=%(right_count)s (%(right_count_from)s)",
+        {
+            # an empty corpus gives no fine table: the flat path runs
+            "path": "flat" if fine is None else "two-level",
+            "right_count": right_count, "right_count_from": count_from,
+            **chosen,
+            **{
+                f"{name}_from": "derived" if passed[name] is None else "passed"
+                for name in chosen
+            },
+        },
+    )
+    q_vec = F.col(vec_col).alias("__qv")
     if fine is not None:
         from paradump_spark.operators.semdedup import _fine_assign
 
         # right side: label every row with its FINE cell; the fine
-        # cluster_id becomes the join key (globally unique bigint)
+        # cluster_id becomes the cell key (globally unique bigint)
         r = _fine_assign(ca, fine, vec_col).select(
             F.col("cluster_id").alias("cell_id"),
             F.col("__rid").alias("neighbor_id"),
-            V.normalized(F.col(vec_col)).alias("__cv"),
-        ).hint("shuffle_hash")
-        # queries: coarse probe (bounded broadcast argmax) → per-coarse
-        # fine ranking kernel → global top-nprobe fine cells
+            F.col(vec_col).alias("__cv"),
+        )
+        # queries: coarse probe (map-side kernel) → per-coarse fine
+        # ranking (cogrouped kernel) → global top-nprobe fine cells.
+        # The ranking output is NARROW (no query vector): carrying the
+        # vector replicates it ×nprobe as per-row Python lists — at 100k
+        # queries × coarse_probe 4 × nprobe 4, 1.6M list materializations
+        # plus their Arrow round-trip, measured as the dominant stage of
+        # the sf5 knn leg (6.7 s of ~20 s, round 11).  The vector is
+        # re-attached below with one keyed join instead.
         qc = probe_cells(
             left.select(F.col(lid).alias("query_id"), F.col(vec_col)),
             coarse, vec_col, coarse_probe,
-        ).select(
-            "cell_id", "query_id", V.normalized(F.col(vec_col)).alias("__qv")
         )
-        q = _probe_fine_arrow(qc, fine, nprobe)
+        q = _top_p_cogroup(
+            qc, fine, vec_col, "cluster_id", "centroid", nprobe,
+            StructType([
+                qc.schema["query_id"],
+                StructField("cell_id", LongType()),
+                StructField("__fs", DoubleType()),
+            ]),
+            _emit_pairs("query_id", "cell_id", "__fs"),
+        )
         q = partial_topk(
             q, ["query_id"],
             [F.col("__fs").desc(), F.col("cell_id").asc()], nprobe,
@@ -1229,15 +1248,9 @@ def knn_join(
             .where(F.col("__fr") <= nprobe)
             .select("cell_id", "query_id")
         )
-        # re-attach the normalized query vector with ONE keyed join —
-        # the probe ranking above is now vector-free end to end (see
-        # _probe_fine_arrow: the vector no longer rides through the
-        # cogroup kernel, its ×nprobe replication, or the two ranking
-        # exchanges); the join shuffles each query vector once.
-        qvec = left.select(
-            F.col(lid).alias("query_id"),
-            V.normalized(F.col(vec_col)).alias("__qv"),
-        )
+        # re-attach the query vector with ONE keyed join: the join
+        # shuffles each query vector once
+        qvec = left.select(F.col(lid).alias("query_id"), q_vec)
         q = q.join(qvec, "query_id").select("cell_id", "query_id", "__qv")
     else:
         cents = ivf_centroids(right, rid, vec_col, num_cells, seed)
@@ -1245,47 +1258,39 @@ def knn_join(
             cents = kmeans_refine(
                 right, cents, rid, vec_col, refine_iters, seed=seed
             )
-        # shuffle_hash hint: without it Catalyst's post-ArrowEvalPython
-        # size estimates can pick a BroadcastHashJoin that ships the
-        # ENTIRE assigned corpus to every task (observed at the 100k
-        # scaling leg) — the documented plan is ONE cell-keyed shuffle
-        # on each side
-        r = ivf_assign(right, cents, rid, vec_col).select(
-            "cell_id",
-            F.col(rid).alias("neighbor_id"),
-            V.normalized(F.col(vec_col)).alias("__cv"),
-        ).hint("shuffle_hash")
-        q = probe_cells(
-            left.select(F.col(lid).alias("query_id"), F.col(vec_col)),
-            cents, vec_col, nprobe,
-        ).select(
-            "cell_id", "query_id", V.normalized(F.col(vec_col)).alias("__qv")
+        # ONE collect feeds both sides: the centroid sample is an
+        # orderBy().limit() job over the right corpus
+        rows = cents.collect()
+        r = _top_p_map(right, rows, vec_col, 1).select(
+            "cell_id", F.col(rid).alias("neighbor_id"), F.col(vec_col).alias("__cv")
         )
-    # Pin BOTH sides to an explicit cell_id partitioning: the join's
-    # INPUT is small (one row per vector) but its OUTPUT explodes by
-    # the per-cell candidate count, so AQE's input-byte-based coalescing
+        q = _top_p_map(
+            left.select(F.col(lid).alias("query_id"), F.col(vec_col)),
+            rows, vec_col, nprobe,
+        ).select("cell_id", "query_id", q_vec)
+    # Pin BOTH sides to an explicit cell_id partitioning: the cogroup's
+    # INPUT is small (one row per vector) but its work grows with the
+    # per-cell candidate count, so AQE's input-byte-based coalescing
     # otherwise shrinks the expensive scoring stage to 1-2 tasks
     # (observed at the 100k scaling leg: a 26-core box pinned at 1 CPU).
     # An explicit numPartitions repartition is exempt from coalescing,
-    # and the join reuses the co-partitioning — still ONE shuffle per
-    # side.
+    # and the cogroup reuses the co-partitioning — still ONE shuffle
+    # per side.
     nparts = int(
         left.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
     )
     q = q.repartition(nparts, "cell_id")
     r = r.repartition(nparts, "cell_id")
-    if scoring == "arrow":
-        scored = _knn_cell_topk_arrow(q, r, k, exclude_self)
-    elif scoring == "jvm":
-        scored = q.join(r, "cell_id").select(
-            "query_id",
-            "neighbor_id",
-            V.dot(F.col("__qv"), F.col("__cv")).alias("cosine"),
-        )
-        if exclude_self:
-            scored = scored.where(F.col("query_id") != F.col("neighbor_id"))
-    else:
-        raise ValueError(f"unknown knn_join scoring: {scoring}")
+    scored = _top_p_cogroup(
+        q, r, "__qv", "neighbor_id", "__cv", k,
+        StructType([
+            q.schema["query_id"],
+            r.schema["neighbor_id"],
+            StructField("cosine", DoubleType()),
+        ]),
+        _emit_pairs("query_id", "neighbor_id", "cosine"),
+        exclude_key="query_id" if exclude_self else None,
+    )
     cand = partial_topk(
         scored, ["query_id"], [F.col("cosine").desc(), F.col("neighbor_id").asc()], k
     )
@@ -1299,114 +1304,6 @@ def knn_join(
     )
 
 
-def _knn_cell_topk_arrow(
-    q: DataFrame, r: DataFrame, k: int, exclude_self: bool
-) -> DataFrame:
-    """Per-cell cosine scoring as a cogrouped numpy kernel: one matmul
-    per (cell, Arrow batch) + per-query top-k INSIDE the kernel, so only
-    ≤ k rows per (query, probed cell) ever leave it.  Tie-break matches
-    the JVM path exactly: stable argsort of -S with columns pre-sorted
-    by neighbor_id (cosine desc, neighbor_id asc).  Self-pairs are
-    masked in-kernel.  The global ranking downstream sees
-    nprobe x k rows per query instead of nprobe x |cell|."""
-    import numpy as np
-    import pandas as pd
-
-    def cell_topk(key, qpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {"query_id": pd.array([], dtype="int64"),
-             "neighbor_id": pd.array([], dtype="int64"),
-             "cosine": pd.array([], dtype="float64")}
-        )
-        if not len(qpdf) or not len(rpdf):
-            return empty
-        rpdf = rpdf.sort_values("neighbor_id", kind="mergesort")
-        Q = np.array(qpdf["__qv"].tolist(), dtype=np.float64)
-        R = np.array(rpdf["__cv"].tolist(), dtype=np.float64)
-        qid = qpdf["query_id"].to_numpy(dtype=np.int64)
-        nid = rpdf["neighbor_id"].to_numpy(dtype=np.int64)
-        S = Q @ R.T
-        if exclude_self:
-            # mask a query's own row (cosines live in [-1, 1])
-            S[qid[:, None] == nid[None, :]] = -2.0
-        kk = min(k, S.shape[1])
-        # stable argsort of -S: ties fall to the lower column index ==
-        # the smaller neighbor_id (columns sorted above) — identical to
-        # the JVM (cosine desc, neighbor_id asc) ordering
-        order = np.argsort(-S, axis=1, kind="stable")[:, :kk]
-        cos = np.take_along_axis(S, order, axis=1)
-        keep = cos > -1.5  # masked self-pairs drop out
-        return pd.DataFrame(
-            {
-                "query_id": np.repeat(qid, kk)[keep.ravel()],
-                "neighbor_id": nid[order.ravel()][keep.ravel()],
-                "cosine": cos.ravel()[keep.ravel()],
-            }
-        )
-
-    return (
-        q.groupBy("cell_id")
-        .cogroup(r.groupBy("cell_id"))
-        .applyInPandas(
-            cell_topk, "query_id long, neighbor_id long, cosine double"
-        )
-    )
-
-
-def _probe_fine_arrow(qc: DataFrame, fine: DataFrame, nprobe: int) -> DataFrame:
-    """Per-coarse-cell fine-centroid ranking for the two-level probe
-    path: queries (replicated to their probed COARSE cells) cogroup
-    with the fine table on the coarse key; one numpy matmul per (cell,
-    batch) ranks that cell's fine centroids and only the per-coarse
-    top-``nprobe`` (fine cell_id, score) rows leave the kernel — the
-    global top-``nprobe`` cut happens downstream via partial_topk.
-    Ties break to the lower fine cluster_id (columns pre-sorted)."""
-    import numpy as np
-    import pandas as pd
-
-    def fine_rank(key, qpdf: pd.DataFrame, fpdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {"query_id": pd.array([], dtype="int64"),
-             "cell_id": pd.array([], dtype="int64"),
-             "__fs": pd.array([], dtype="float64")}
-        )
-        if not len(qpdf) or not len(fpdf):
-            return empty
-        fpdf = fpdf.sort_values("cluster_id", kind="mergesort")
-        cid = fpdf["cluster_id"].to_numpy(dtype=np.int64)
-        C = np.array(fpdf["centroid"].tolist(), dtype=np.float64)
-        cn = np.linalg.norm(C, axis=1, keepdims=True)
-        Cn = C / np.where(cn == 0.0, 1.0, cn)
-        Q = np.array(qpdf["__qv"].tolist(), dtype=np.float64)  # normalized
-        S = Q @ Cn.T
-        kk = min(nprobe, S.shape[1])
-        order = np.argsort(-S, axis=1, kind="stable")[:, :kk]
-        # NARROW output (round 11): the query vector used to ride along
-        # and be replicated ×nprobe as per-row Python lists — at 100k
-        # queries × coarse_probe 4 × nprobe 4 that was 1.6M 64-double
-        # list materializations plus their Arrow round-trip, the
-        # dominant stage of the sf5 knn leg (6.7 s of ~20 s measured).
-        # The caller re-attaches vectors with one keyed join instead.
-        return pd.DataFrame(
-            {
-                "query_id": np.repeat(
-                    qpdf["query_id"].to_numpy(dtype=np.int64), kk
-                ),
-                "cell_id": cid[order.ravel()],
-                "__fs": np.take_along_axis(S, order, axis=1).ravel(),
-            }
-        )
-
-    return (
-        qc.groupBy("cell_id")
-        .cogroup(fine.groupBy("cell_id"))
-        .applyInPandas(
-            fine_rank,
-            "query_id long, cell_id long, __fs double",
-        )
-    )
-
-
 def knn_graph_clusters(
     emb: DataFrame,
     id_col: str,
@@ -1417,7 +1314,6 @@ def knn_graph_clusters(
     nprobe: int | None = 4,
     refine_iters: int = 0,
     seed: int = 42,
-    scoring: str = "jvm",
     coarse_cells: int | None = None,
     coarse_probe: int | None = None,
 ) -> DataFrame:
@@ -1451,7 +1347,7 @@ def knn_graph_clusters(
     edges = knn_join(
         emb, emb, id_col, vec_col, k=k, num_cells=num_cells, nprobe=nprobe,
         exclude_self=True, refine_iters=refine_iters, seed=seed,
-        scoring=scoring, coarse_cells=coarse_cells, coarse_probe=coarse_probe,
+        coarse_cells=coarse_cells, coarse_probe=coarse_probe,
     ).where(F.col("cosine") > threshold).select(
         F.col("query_id").alias("id_a"), F.col("neighbor_id").alias("id_b")
     )

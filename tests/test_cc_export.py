@@ -122,3 +122,19 @@ def test_connected_components_driver_path_equals_distributed(spark):
         for r in connected_components(s_edges).collect()
     }
     assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
+
+
+def test_connected_components_over_cap_releases_edge_cache(spark):
+    """Over the driver cap the edge pin is persisted for the vertex set
+    and round 1; once those are checkpointed it must be released, so a
+    collected result leaves the session's cache empty."""
+    spark.catalog.clearCache()
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11)], "id_a bigint, id_b bigint"
+    )
+    got = {
+        r["id"]: r["component"]
+        for r in connected_components(edges, driver_edge_cap=0).collect()
+    }
+    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

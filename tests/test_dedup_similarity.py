@@ -523,43 +523,93 @@ def test_knn_join_recall_rises_with_nprobe(spark, sf_dir):
     assert hi > 0.8
 
 
-def test_knn_join_arrow_scoring_equals_jvm(spark, sf_dir):
-    """The cogrouped numpy scoring kernel (the corpus-scale path:
-    in-kernel matmul + per-cell top-k) is frame-EQUAL to the
-    oracle-proven JVM HOF path at exact AND approximate budgets —
-    same pair set, same (cosine desc, neighbor_id asc) ordering."""
-    emb = _emb(spark, sf_dir)
-    q = emb.where(F.col("vec_id") < 200)
-    for nprobe in (8, 3):
-        a = (
-            SIM.knn_join(q, emb, "vec_id", "embedding", k=3, num_cells=8,
-                         nprobe=nprobe, exclude_self=True, scoring="jvm")
-            .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
-        )
-        b = (
-            SIM.knn_join(q, emb, "vec_id", "embedding", k=3, num_cells=8,
-                         nprobe=nprobe, exclude_self=True, scoring="arrow")
-            .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
-        )
-        assert a.equals(b), f"nprobe={nprobe}"
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="scoring"):
-        SIM.knn_join(q, emb, "vec_id", "embedding", scoring="gpu")
-
-
-def test_probe_cells_arrow_matches_jvm(spark, sf_dir):
-    """auto/arrow and jvm probe expansions agree (ties to lowest cell)."""
+def test_probe_cells_equals_brute_force_on_centroids(spark, sf_dir):
+    """probe_cells' cell set is brute_force_topk (the JVM reference)
+    with the centroids as the corpus, the rows as queries and
+    k = nprobe — same (cosine desc, cell_id asc) order."""
     emb = _emb(spark, sf_dir).limit(100)
     cents = SIM.ivf_centroids(emb, "vec_id", "embedding", 40)
-    a = sorted(
+    got = sorted(
         (r.vec_id, r.cell_id)
-        for r in SIM.probe_cells(emb, cents, "embedding", 3, method="arrow").collect()
+        for r in SIM.probe_cells(emb, cents, "embedding", 3).collect()
     )
-    j = sorted(
-        (r.vec_id, r.cell_id)
-        for r in SIM.probe_cells(emb, cents, "embedding", 3, method="jvm").collect()
+    want = sorted(
+        (r.query_id, r.neighbor_id)
+        for r in SIM.brute_force_topk(
+            cents.select("cell_id", F.col("centroid").alias("embedding")),
+            emb, "cell_id", "embedding", query_id_col="vec_id", k=3,
+        ).collect()
     )
-    assert a == j
+    assert len(got) == 300
+    assert got == want
+
+
+def test_knn_join_flat_collects_centroids_once(spark, sf_dir):
+    """The flat path's centroid frame (an orderBy().limit() job over the
+    right corpus) is collected ONCE and feeds both the right-side assign
+    and the left-side probe."""
+    from unittest.mock import patch
+
+    emb = _emb(spark, sf_dir).limit(100)
+    calls = []
+    orig = type(emb).collect
+
+    def counting(self):
+        calls.append(1)
+        return orig(self)
+
+    with patch.object(type(emb), "collect", counting):
+        out = SIM.knn_join(
+            emb, emb, "vec_id", "embedding", k=2, num_cells=4, nprobe=2,
+            coarse_cells=0,
+        )
+    assert len(calls) == 1
+    assert out.count() == 200
+
+
+def test_knn_join_logs_geometry_decision(spark, sf_dir, monkeypatch, caplog):
+    """One INFO record per knn_join names the path and where each input
+    came from, on both sides of KNN_TWO_LEVEL_CELLS."""
+    import logging
+
+    emb = _emb(spark, sf_dir).limit(64)
+
+    def record(**kw):
+        caplog.clear()
+        with caplog.at_level(logging.INFO, logger="paradump_spark"):
+            SIM.knn_join(emb, emb, "vec_id", "embedding", k=2, **kw)
+        (rec,) = [
+            r for r in caplog.records
+            if r.name == "paradump_spark" and r.msg.startswith("knn_join")
+        ]
+        return rec.args
+
+    # below the switch: 64 rows / 128 per cell -> 4 cells, flat
+    a = record(right_count=64)
+    assert a["path"] == "flat"
+    assert (a["right_count"], a["right_count_from"]) == (64, "passed")
+    assert (a["num_cells"], a["num_cells_from"]) == (4, "derived")
+    assert (a["coarse_cells"], a["coarse_cells_from"]) == (0, "derived")
+    assert (a["nprobe"], a["nprobe_from"]) == (4, "passed")
+    assert (a["coarse_probe"], a["coarse_probe_from"]) == (4, "derived")
+
+    # at the switch: 64 rows / 8 per cell = 8 cells >= 8 -> two-level
+    monkeypatch.setattr(SIM, "KNN_CELL_OCCUPANCY", 8)
+    monkeypatch.setattr(SIM, "KNN_TWO_LEVEL_CELLS", 8)
+    b = record(nprobe=None, coarse_probe=2)
+    assert b["path"] == "two-level"
+    assert (b["right_count"], b["right_count_from"]) == (64, "count()")
+    assert (b["num_cells"], b["num_cells_from"]) == (8, "derived")
+    assert (b["coarse_cells"], b["coarse_cells_from"]) == (8, "derived")
+    assert b["nprobe_from"] == "derived"
+    assert (b["coarse_probe"], b["coarse_probe_from"]) == (2, "passed")
+
+    # every geometry input passed: no count is needed
+    c = record(num_cells=4, coarse_cells=2, coarse_probe=2)
+    assert c["path"] == "two-level"
+    assert (c["right_count"], c["right_count_from"]) == (None, "not needed")
+    assert {c[f"{n}_from"] for n in
+            ("num_cells", "coarse_cells", "nprobe", "coarse_probe")} == {"passed"}
 
 
 def test_knn_graph_clusters_balls_and_chain(spark):
@@ -609,15 +659,14 @@ def test_knn_join_two_level_full_probe_equals_flat_exact(spark, sf_dir):
             emb, emb, "vec_id", "embedding", k=3, num_cells=8, nprobe=8
         ).collect()
     )
-    for scoring in ("jvm", "arrow"):
-        tl = sorted(
-            (r.query_id, r.neighbor_id, r.rank, r.cosine)
-            for r in SIM.knn_join(
-                emb, emb, "vec_id", "embedding", k=3, num_cells=8,
-                nprobe=8, coarse_cells=3, coarse_probe=3, scoring=scoring,
-            ).collect()
-        )
-        assert tl == flat, scoring
+    tl = sorted(
+        (r.query_id, r.neighbor_id, r.rank, r.cosine)
+        for r in SIM.knn_join(
+            emb, emb, "vec_id", "embedding", k=3, num_cells=8,
+            nprobe=8, coarse_cells=3, coarse_probe=3,
+        ).collect()
+    )
+    assert tl == flat
 
 
 def test_knn_join_two_level_recall_and_plan(spark, sf_dir):

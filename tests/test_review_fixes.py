@@ -198,23 +198,30 @@ def test_load_events_bare_int64_micros_not_divided(spark, tmp_path):
     assert df2.collect()[0]["ts"].year == 2023
 
 
-def test_ivf_assign_auto_empty_centroids_degrades_to_jvm(spark):
-    """ADVICE r07: method='auto' used count()+first() and raised
-    TypeError on an empty centroid table; it must fall back to the JVM
-    path (which yields NULL cell_id like any empty argmax) instead."""
-    from paradump_spark.operators.similarity import ivf_assign
+def test_ivf_assign_empty_centroids_gives_null_cell(spark):
+    """ADVICE r07: an empty centroid table raised TypeError in the old
+    count()+first() probe; ivf_assign must instead label every row with
+    a NULL cell_id (and probe_cells give no rows), with no exception.
+    A table of NULL centroids behaves the same."""
+    from paradump_spark.operators.similarity import ivf_assign, probe_cells
 
     corpus = spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, [0.0, 1.0])], "id long, v array<float>"
     )
     empty = spark.createDataFrame([], "cell_id int, centroid array<float>")
-    out = ivf_assign(corpus, empty, "id", "v", method="auto")
-    assert "cell_id" in out.columns  # plan builds; no TypeError
+    nulls = spark.createDataFrame(
+        [(0, None)], "cell_id int, centroid array<float>"
+    )
+    for cents in (empty, nulls):
+        out = ivf_assign(corpus, cents, "id", "v").collect()
+        assert sorted(r["id"] for r in out) == [1, 2]
+        assert all(r["cell_id"] is None for r in out)
+        assert probe_cells(corpus, cents, "v", 2).count() == 0
 
 
 def test_ivf_assign_auto_single_collect(spark):
-    """The auto probe must reuse ONE bounded collect for both the k*d
-    decision and the arrow kernel — no extra count()/first() jobs."""
+    """ivf_assign runs ONE bounded collect of the centroid table for the
+    kernel — no extra count()/first() jobs."""
     from unittest.mock import patch
 
     from paradump_spark.operators.similarity import ivf_assign
@@ -226,7 +233,7 @@ def test_ivf_assign_auto_single_collect(spark):
     cents = spark.createDataFrame(
         [(c, [float(c + 1)] * 18 + [0.0] * 0) for c in range(40)],
         "cell_id int, centroid array<float>",
-    )  # 40 cells x 18 dims = 720 >= 512 -> arrow path
+    )
     calls = {"collect": 0, "count": 0, "first": 0}
     orig_collect = type(cents).collect
     with patch.object(
@@ -240,6 +247,6 @@ def test_ivf_assign_auto_single_collect(spark):
         type(cents), "first",
         lambda self: (_ for _ in ()).throw(AssertionError("first() called")),
     ):
-        out = ivf_assign(corpus, cents, "id", "v", method="auto")
+        out = ivf_assign(corpus, cents, "id", "v")
     assert calls["collect"] == 1
     assert out.where(F.col("cell_id").isNull()).count() == 0

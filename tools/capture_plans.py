@@ -1,27 +1,30 @@
 """Capture `.explain("formatted")` output for declared queries into
-plans/r12/<name>_<tag>.txt — the optimization round's before/after plan
-evidence (the judge checks plan-shape claims against these files).
+plans/<round>/<name>_<tag>.txt — before/after plan evidence for a change
+(plan-shape claims are checked against these files).
 
-Usage: python tools/r12_capture_plans.py <tag> [sf_dir] [names...]
-       (no names = every driver-window queries() entry)
+Usage: python tools/capture_plans.py <round> <tag> [sf_dir] [names...]
+       (no names = every queries() and extra_queries() entry; sf_dir is
+       the first argument containing "/", else $SPARK_GRAFT_SF_DIR)
 """
 
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as E  # noqa: E402
 from paradump_spark.session import build_session  # noqa: E402
 
-OUT_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                       "plans", "r12")
-
 
 def main():
-    tag = sys.argv[1]
-    rest = sys.argv[2:]
-    sf_dir = rest[0] if rest and "/" in rest[0] else "/root/testdata/sf0.01"
+    if len(sys.argv) < 3:
+        raise SystemExit(__doc__)
+    round_name, tag = sys.argv[1], sys.argv[2]
+    rest = sys.argv[3:]
+    sf_dir = rest[0] if rest and "/" in rest[0] else os.environ.get("SPARK_GRAFT_SF_DIR")
+    if not sf_dir:
+        raise SystemExit("no sf_dir argument and SPARK_GRAFT_SF_DIR is unset")
     names = [a for a in rest if "/" not in a]
 
     spark = build_session(master="local[4]", shuffle_partitions=4)
@@ -30,7 +33,8 @@ def main():
     if names:
         qmap = {k: v for k, v in qmap.items() if k in names}
 
-    os.makedirs(OUT_DIR, exist_ok=True)
+    out_dir = os.path.join(ROOT, "plans", round_name)
+    os.makedirs(out_dir, exist_ok=True)
     for name, fn in qmap.items():
         try:
             df = fn(spark, sf_dir)
@@ -39,7 +43,7 @@ def main():
             )
         except Exception as ex:  # noqa: BLE001
             plan = f"ERROR {type(ex).__name__}: {ex}"
-        path = os.path.join(OUT_DIR, f"{name}_{tag}.txt")
+        path = os.path.join(out_dir, f"{name}_{tag}.txt")
         with open(path, "w") as fh:
             fh.write(plan)
         print(f"wrote {path} ({len(plan)} chars)")

@@ -8,10 +8,9 @@ SparkListener without shipping a JVM class; the status store is already
 maintained by AppStatusListener for every application, so reading it
 adds zero overhead to the timed region.
 
-Used by bench.py (per-query ``jobs`` / ``shuffle_bytes`` in the sidecar
-detail) and by ad-hoc step profiling during optimization rounds — the
-"fewer Spark jobs" claims of the round-12 media/dedup work are checked
-against these numbers by a pytest (tests/test_jobcount.py).
+Used by tools/r12_media_probe.py (per-query job counts and shuffle
+bytes for the media dedup steps) and for ad-hoc step profiling; no
+pytest or bench.py row reads it.
 """
 
 from __future__ import annotations
@@ -24,10 +23,14 @@ def job_group_stats(spark, group: str) -> dict:
     Returns ``{"jobs": int, "shuffle_write": int, "shuffle_read": int}``.
     Shuffle bytes are summed over the DISTINCT stages of those jobs
     (a stage shared by two jobs — skipped/reused exchanges — counts
-    once).  Never raises: on any py4j/store surprise it returns -1
-    markers so the bench keeps its never-sink contract.
+    once).  The AppStatusListener fills the store asynchronously, so the
+    listener bus is drained first (up to 10 s) — a job that just
+    finished is otherwise missed or half-counted.  Never raises: on any
+    py4j/store surprise it returns -1 markers so a caller's run is never
+    sunk by its observability.
     """
     try:
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10_000)
         store = spark.sparkContext._jsc.sc().statusStore()
         jobs = store.jobsList(None)
         stage_ids: set[int] = set()

@@ -2,7 +2,7 @@
 """Scale evidence for the kNN-join / kNN-graph family (VERDICT r08
 directive 5: the newest machinery had the least scale evidence).
 
-Times the REAL operators (the declared HOF-dot scoring path, not a
+Times the REAL operators (the one numpy scoring kernel, not a
 stand-in) at growing corpus sizes with FIXED search budgets, so the
 log-log slope isolates the corpus term:
 
@@ -107,8 +107,6 @@ def main() -> None:
                       "graph_linear_cells": "N/78 constant occupancy (linear; the 100 TB rule)",
                   }},
         "runs": "median-of-3 after warmup, load-gated < 0.7",
-        "scoring": "arrow (the corpus-scale kernel; pytest-equal to the "
-                   "oracle-proven jvm path)",
     }}
 
     # ---- kNN-join: fixed 2k-query batch, corpus 100k -> 500k ----
@@ -121,7 +119,7 @@ def main() -> None:
         def run():
             SIM.knn_join(
                 q, emb, "vec_id", "embedding", k=10,
-                num_cells=256, nprobe=4, scoring="arrow",
+                num_cells=256, nprobe=4,
             ).agg(F.count(F.lit(1))).collect()
 
         join_pts[name] = timed(run)
@@ -183,7 +181,7 @@ def main() -> None:
                 def run(emb=emb, c=c, cc=cc):
                     SIM.knn_graph_clusters(
                         emb, "vec_id", "embedding", threshold=0.9, k=5,
-                        num_cells=c, nprobe=2, scoring="arrow",
+                        num_cells=c, nprobe=2,
                         coarse_cells=cc, coarse_probe=2,
                     ).agg(F.count(F.lit(1))).collect()
 
@@ -216,12 +214,9 @@ def main() -> None:
     # ---- DEFAULT-invocation leg (VERDICT r09 directive 1 done-check):
     # knn_join with num_cells/coarse_cells UNSET — the operator derives
     # constant-occupancy cells from right_count and auto-switches
-    # two-level at >= KNN_TWO_LEVEL_CELLS.  scoring="arrow" is the one
-    # explicit arg (the corpus-scale kernel; the jvm default is the
-    # oracle formulation, pytest-equal, ~25x slower on self-joins and
-    # not what a scale run uses).  Self-join: every row a query — the
-    # exact shape the round-9 ledger measured at exp 2.17 when the
-    # default was num_cells=16.
+    # two-level at >= KNN_TWO_LEVEL_CELLS.  Self-join: every row a
+    # query — the exact shape the round-9 ledger measured at exp 2.17
+    # when the default was num_cells=16.
     dflt = {}
     for name, d, n in (("100k", "scratch/sf5_emb", 100_000),
                        ("500k", "scratch/sf25_emb", 500_000)):
@@ -231,7 +226,7 @@ def main() -> None:
         def run(emb=emb, n=n):
             SIM.knn_join(
                 emb, emb, "vec_id", "embedding",
-                exclude_self=True, scoring="arrow", right_count=n,
+                exclude_self=True, right_count=n,
             ).agg(F.count(F.lit(1))).collect()
 
         dflt[name] = timed(run)
@@ -239,7 +234,7 @@ def main() -> None:
     sec["join_default_invocation"] = {
         **dflt,
         "params": "knn_join defaults (k=10, nprobe=4, num_cells=None -> "
-                  "derived, coarse auto); scoring=arrow; self-join",
+                  "derived, coarse auto); self-join",
         "corpus_ratio": 5.0,
         "time_ratio": round(dflt["500k"] / dflt["100k"], 2),
         "exp": round(
@@ -287,7 +282,7 @@ def recall_curve(spark) -> dict:
         for nprobe in (4, 16):
             got = SIM.knn_join(
                 q, emb, "vec_id", "embedding", k=10, num_cells=cells,
-                nprobe=nprobe, scoring="arrow", coarse_cells=0,
+                nprobe=nprobe, coarse_cells=0,
             )
             pts[f"flat_nprobe{nprobe}"] = round(
                 SIM.ann_recall(got, exact).collect()[0]["mean_recall"], 3
@@ -295,8 +290,7 @@ def recall_curve(spark) -> dict:
             for cp in (2, 4):
                 got = SIM.knn_join(
                     q, emb, "vec_id", "embedding", k=10, num_cells=cells,
-                    nprobe=nprobe, scoring="arrow",
-                    coarse_cells=coarse, coarse_probe=cp,
+                    nprobe=nprobe, coarse_cells=coarse, coarse_probe=cp,
                 )
                 pts[f"two_level_cp{cp}_nprobe{nprobe}"] = round(
                     SIM.ann_recall(got, exact).collect()[0]["mean_recall"],
@@ -310,7 +304,7 @@ def recall_curve(spark) -> dict:
         def run_default(emb=emb, q=q, n=n):
             return SIM.knn_join(
                 q, emb, "vec_id", "embedding", k=10,
-                right_count=n, scoring="arrow",
+                right_count=n,
             )
 
         # warm once (centroid train + codegen), then time ONLY the kNN
@@ -359,7 +353,7 @@ def default_2m(ledger_path: str) -> None:
         def run(emb=emb, n=n):
             SIM.knn_join(
                 emb, emb, "vec_id", "embedding",
-                exclude_self=True, scoring="arrow", right_count=n,
+                exclude_self=True, right_count=n,
             ).agg(F.count(F.lit(1))).collect()
 
         dflt[name] = timed(run)
@@ -379,7 +373,7 @@ def default_2m(ledger_path: str) -> None:
     def run_default(emb=emb, q=q, n=n):
         return SIM.knn_join(
             q, emb, "vec_id", "embedding", k=10,
-            right_count=n, scoring="arrow",
+            right_count=n,
         )
 
     print(f"default_derived recall leg 2m: load {wait_quiet():.2f}")
