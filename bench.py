@@ -597,10 +597,13 @@ def main() -> None:
     # The session's 1 MB split target (set at build_session above) makes
     # the scratch corpus read fan out across the worker threads the way
     # a natural multi-thousand-split production scan would.
-    # checkpoint=False below: internal hash-frame pins go to DISK_ONLY
-    # persists instead of executor-heap localCheckpoints — with the
-    # corpus streaming from storage, nothing media-sized ever occupies
-    # storage memory (the 100 TB posture end to end).
+    # Each media dedup step pins only its signature and rep frames, as
+    # localCheckpoints owned by the returned frame (freed with it; no
+    # persist, so the 3 repeats below leave the session cache empty).
+    # Those pins hold O(rows) fingerprints, never payload bytes; they
+    # drop lineage, so a lost executor fails the step instead of
+    # recomputing — lineage-keeping pins need an ownership scope that
+    # Spark's lazy frames do not give an operator.
     media_dir = tempfile.mkdtemp(prefix="bench_media_")
 
     def _media_corpus(name, gen):
@@ -624,8 +627,7 @@ def main() -> None:
         def image_dedup_step():
             with img_bound:
                 MMOD.image_dedup_flags(
-                    img_corpus, "doc_id", algo="dhash", max_hamming=4,
-                    checkpoint=False,
+                    img_corpus, "doc_id", algo="dhash", max_hamming=4
                 ).count()
 
         # warm the Arrow hash path once
@@ -645,7 +647,7 @@ def main() -> None:
         def audio_dedup_step():
             with aud_bound:
                 MMOD.audio_dedup_flags(
-                    aud_corpus, "doc_id", max_hamming=4, checkpoint=False
+                    aud_corpus, "doc_id", max_hamming=4
                 ).count()
 
         with aud_bound:
@@ -661,7 +663,7 @@ def main() -> None:
         def video_dedup_step():
             with vid_bound:
                 MMOD.video_dedup_flags(
-                    vid_corpus, "doc_id", n_frames=8, checkpoint=False
+                    vid_corpus, "doc_id", n_frames=8
                 ).count()
 
         with vid_bound:
@@ -678,9 +680,7 @@ def main() -> None:
 
         def audio_robust_step():
             with aur_bound:
-                MMOD.audio_robust_dedup_flags(
-                    aur_corpus, "doc_id", checkpoint=False
-                ).count()
+                MMOD.audio_robust_dedup_flags(aur_corpus, "doc_id").count()
 
         with aur_bound:
             MMOD.audio_robust_signatures(
@@ -694,9 +694,7 @@ def main() -> None:
 
         def video_robust_step():
             with vir_bound:
-                MMOD.video_robust_dedup_flags(
-                    vir_corpus, "doc_id", checkpoint=False
-                ).count()
+                MMOD.video_robust_dedup_flags(vir_corpus, "doc_id").count()
 
         with vir_bound:
             MMOD.video_frame_hash_signatures(

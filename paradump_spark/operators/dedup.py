@@ -611,7 +611,10 @@ def _small_star_directed(sym: DataFrame) -> DataFrame:
 #: paths use; anything larger keeps the fully distributed path, so the
 #: 100 TB posture is unchanged.  The union-find labels components by
 #: their MINIMUM id — exactly the distributed algorithm's contract —
-#: and equality is pytest-asserted on both paths.
+#: and equality is pytest-asserted on both paths.  The cap assumes
+#: ~8-byte ids: for string ids :func:`connected_components` divides it
+#: by 8 (62_500 edges at the default), since a string key can be far
+#: wider than a long.
 CC_DRIVER_EDGE_CAP = 500_000
 
 
@@ -670,8 +673,10 @@ def connected_components(
     ``driver_edge_cap``: edge count at or below which the component
     labels are solved by one bounded driver union-find over the
     (already pinned) edge set instead of the iterative rounds — see
-    :data:`CC_DRIVER_EDGE_CAP`.  Pass ``0`` to force the distributed
-    path (the scaling tests do).  Both paths return identical frames.
+    :data:`CC_DRIVER_EDGE_CAP`.  For string ids the cap is divided by
+    8 (at least 1): the budget assumes ~8-byte ids, and a string key
+    can be far wider.  Pass ``0`` to force the distributed path (the
+    scaling tests do).  Both paths return identical frames.
 
     EAGER CONTRACT: this function runs Spark jobs at *call* time (the
     edge pin + the cap-check count, and under the cap one bounded

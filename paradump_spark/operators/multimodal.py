@@ -17,11 +17,14 @@ batch-sized, not partition-sized; payload bytes stay off the driver.
 from __future__ import annotations
 
 import hashlib
+import logging
 from typing import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+log = logging.getLogger("paradump_spark")
 
 # metadata struct carried next to every binary payload
 MEDIA_META = T.StructType(
@@ -627,18 +630,34 @@ def choose_hamming_sub_bands(
     there, no probe needed) OR when the sampled occupancy probe
     estimates more than :data:`HAMMING_PAIRS_PER_ROW_SWITCH` candidate
     pairs per fingerprint (skewed corpora cross the break-even long
-    before 8M distinct).  ``None`` (single-level) otherwise."""
+    before 8M distinct).  ``None`` (single-level) otherwise.
+
+    The decision is logged once at INFO on the ``paradump_spark``
+    logger, with the level, ``n_rows``, the thresholds and (when the
+    probe ran) ``est_candidate_pairs`` as a dict in ``record.args``."""
     n = n_rows if n_rows is not None else reps.count()
+    est = None
     if n >= HAMMING_WIDE_KEYS_MIN:
-        return max_hamming + 1
-    if n < HAMMING_PROBE_MIN_DISTINCT:
-        return None
-    probe = hamming_band_occupancy_probe(
-        reps, hash_col, max_hamming, n_rows=n
+        sub = max_hamming + 1
+    elif n < HAMMING_PROBE_MIN_DISTINCT:
+        sub = None
+    else:
+        est = hamming_band_occupancy_probe(
+            reps, hash_col, max_hamming, n_rows=n
+        )["est_candidate_pairs"]
+        sub = max_hamming + 1 if est >= HAMMING_PAIRS_PER_ROW_SWITCH * n else None
+    log.info(
+        "hamming band keys %(level)s: n_rows=%(n_rows)s, "
+        "est_candidate_pairs=%(est_candidate_pairs)s",
+        {
+            "level": "single" if sub is None else "two-level",
+            "sub_bands": sub, "n_rows": n, "est_candidate_pairs": est,
+            "wide_keys_min": HAMMING_WIDE_KEYS_MIN,
+            "probe_min_distinct": HAMMING_PROBE_MIN_DISTINCT,
+            "pairs_per_row_switch": HAMMING_PAIRS_PER_ROW_SWITCH,
+        },
     )
-    if probe["est_candidate_pairs"] >= HAMMING_PAIRS_PER_ROW_SWITCH * n:
-        return max_hamming + 1
-    return None
+    return sub
 
 
 def hamming_band_key_cols(
@@ -764,48 +783,70 @@ def hamming_band_pairs(
     )
 
 
-def _pin(df: DataFrame, checkpoint: bool) -> DataFrame:
-    """Pin a frame that is consumed by several downstream stages.
+def _family_flags(
+    sig: DataFrame,
+    key: str,
+    flag_name: str,
+    edges_fn,
+    valid=None,
+) -> DataFrame:
+    """The keyed-family core every media dedup pipeline shares.  Input
+    ``(doc_id, <key>, decode_error)``; output every input row as
+    ``(doc_id, <key>, <flag_name>, decode_error)``, the flag true iff a
+    lower-id row in the same near-dup family exists — that lowest id is
+    the kept representative.  Rows with a non-NULL ``decode_error`` (or
+    failing ``valid``) are never flagged.
 
-    ``checkpoint=True`` (default): ``localCheckpoint(eager=True)`` —
-    executor MEMORY_AND_DISK blocks, lineage truncated.  Right when the
-    pinned frame is small (the hash frames here are O(rows) scalar
-    fingerprints / sub-fingerprint sets, orders of magnitude below the
-    payload corpus).
+    Exact stage: ONE shuffle groups IDENTICAL keys to their min id, so a
+    ball of identical signatures never reaches the edge generator.
+    ``edges_fn(reps)`` turns the distinct ``(<key>, rep_id)`` frame into
+    ``(id_a, id_b)`` near-dup edges between reps; large-star/small-star
+    connected components close them transitively, and a left join +
+    ``coalesce`` maps every row to its family keeper.  No vertices are
+    passed: a rep with no edge coalesces to itself exactly as a
+    self-labeled vertex would, so under the driver-CC cap the labels
+    are a local, broadcast frame (no vertex union/distinct exchange).
 
-    ``checkpoint=False``: eager DISK_ONLY persist — the 100 TB-shape
-    knob.  Never occupies executor heap, so a large pinned stage cannot
-    evict shuffle or broadcast blocks (the round-10 sf5 `video_dedup`
-    eviction artifact, BASELINE.md r10); lineage is kept, so blocks
-    lost to executor churn recompute from the source parquet instead
-    of failing the job.  Costs one disk round-trip per consumer read.
+    Pins: ``sig`` is consumed three times (exact stage, flags join, rep
+    mapping) and ``reps`` by every edge-generator side and the rep
+    mapping, so both are ``localCheckpoint``s — ``sig`` eagerly (the
+    Python signature UDF runs once), ``reps`` lazily (a generator that
+    needs the rep count materializes it with that same count job;
+    otherwise the first edge job does).  These blocks belong to the
+    returned frame and are freed with it (ContextCleaner); nothing is
+    ``persist``ed, so no call leaves the session's CacheManager
+    non-empty.  The pins drop lineage, so a lost executor fails the job
+    rather than recomputing; over its driver cap
+    :func:`~paradump_spark.operators.dedup.connected_components`
+    truncates lineage the same way.
     """
-    if checkpoint:
-        return df.localCheckpoint(eager=True)
-    from pyspark import StorageLevel
+    from paradump_spark.operators.dedup import connected_components
 
-    df = df.persist(StorageLevel.DISK_ONLY)
-    df.count()  # materialize now: every consumer reads blocks, not lineage
-    return df
-
-
-def _pin_counted(df: DataFrame, checkpoint: bool) -> tuple:
-    """:func:`_pin` variant for frames whose ROW COUNT the caller needs
-    anyway (the band-key level decision): persist + one count job both
-    materializes the pin and returns the count — fusing what used to be
-    a pin job plus a separate count job into one driver submission
-    (round 12, VERDICT r11 item 1: at bench scale the ~0.15-0.3 s/job
-    floor was most of each media query's wall clock).  ``checkpoint``
-    picks the storage level exactly like :func:`_pin` (True → executor
-    memory-and-disk, False → DISK_ONLY, the 100 TB shape); lineage is
-    kept either way, which only matters if blocks are evicted (they
-    recompute from the source instead of failing)."""
-    from pyspark import StorageLevel
-
-    df = df.persist(
-        StorageLevel.MEMORY_AND_DISK if checkpoint else StorageLevel.DISK_ONLY
+    sig = sig.localCheckpoint(eager=True)
+    ok = sig.where(F.col("decode_error").isNull())
+    if valid is not None:
+        ok = ok.where(valid)
+    reps = (
+        ok.groupBy(key)
+        .agg(F.min("doc_id").alias("rep_id"))
+        .localCheckpoint(eager=False)
     )
-    return df, df.count()
+    comp = connected_components(edges_fn(reps))
+    fam = reps.join(
+        comp.withColumnRenamed("id", "rep_id"), "rep_id", "left"
+    ).select(
+        key,
+        F.coalesce(F.col("component"), F.col("rep_id")).alias("__keeper"),
+    )
+    return sig.join(fam, key, "left").select(
+        F.col("doc_id"),
+        F.col(key),
+        (
+            F.col("__keeper").isNotNull()
+            & (F.col("doc_id") != F.col("__keeper"))
+        ).alias(flag_name),
+        F.col("decode_error"),
+    )
 
 
 def perceptual_dedup_flags(
@@ -813,7 +854,6 @@ def perceptual_dedup_flags(
     max_hamming: int = 4,
     flag_name: str = "is_dup",
     hash_col: str = "phash",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Shared Hamming-near-dup pipeline over any 64-bit fingerprint
     frame ``(doc_id, <hash_col>, decode_error)`` — the media-agnostic
@@ -824,57 +864,22 @@ def perceptual_dedup_flags(
     representative.  Undecodable rows (non-NULL ``decode_error``) are
     never flagged.
 
-    Scale shape: exact stage groups IDENTICAL hashes to their min id in
-    ONE shuffle (a ball of identical fingerprints never reaches the
-    band join) → Hamming-band equi-join over DISTINCT fingerprints only
-    (two-level occupancy-bounded keys once the measured distinct count
-    crosses :data:`HAMMING_WIDE_KEYS_MIN` — see
-    :func:`hamming_band_pairs`) → large-star/small-star connected
-    components over rep edges (≤ 2·log₂ n rounds).  No cartesian, no
-    per-pair Python.
+    Edges (:func:`_family_flags` core): a Hamming-band equi-join over
+    the DISTINCT fingerprints, two-level keys when
+    :func:`choose_hamming_sub_bands` says so (see
+    :func:`hamming_band_pairs`).  No cartesian, no per-pair Python.
     """
-    from paradump_spark.operators.dedup import connected_components
 
-    # the hash table is consumed three times (exact stage, flags join,
-    # rep mapping) — pin it so the Python hashing UDF runs once
-    h = _pin(hashed, checkpoint)
-    ok = h.where(F.col("decode_error").isNull())
-    # reps is consumed three times too (count, band join, rep mapping);
-    # pinning keeps the exact-stage shuffle single-run, and the fused
-    # pin+count returns the distinct count — which picks the band-key
-    # level — without a second job submission
-    reps, n_reps = _pin_counted(
-        ok.groupBy(hash_col).agg(F.min("doc_id").alias("rep_id")),
-        checkpoint,
-    )
-    sub = choose_hamming_sub_bands(reps, hash_col, max_hamming, n_rows=n_reps)
-    pairs = hamming_band_pairs(
-        reps.select(F.col("rep_id").alias("doc_id"), hash_col),
-        "doc_id", hash_col, max_hamming, sub_bands=sub,
-    )
-    # no vertices: the fam join below is a LEFT join + coalesce to
-    # rep_id, so labels for edge ids alone are sufficient — an isolated
-    # rep coalesces to itself exactly as a self-labeled vertex would.
-    # Under the driver-CC cap this makes comp a LOCAL frame: no vertex
-    # union/distinct exchange, and the fam join broadcasts (round 12,
-    # VERDICT r11 item 1 — each removed exchange is one fewer AQE
-    # stage job at the ~0.15-0.3 s driver submission floor).
-    comp = connected_components(pairs.select("id_a", "id_b"))
-    fam = reps.join(
-        comp.withColumnRenamed("id", "rep_id"), "rep_id", "left"
-    ).select(
-        hash_col,
-        F.coalesce(F.col("component"), F.col("rep_id")).alias("__keeper"),
-    )
-    return h.join(fam, hash_col, "left").select(
-        F.col("doc_id"),
-        F.col(hash_col),
-        (
-            F.col("__keeper").isNotNull()
-            & (F.col("doc_id") != F.col("__keeper"))
-        ).alias(flag_name),
-        F.col("decode_error"),
-    )
+    def edges(reps):
+        # its count of the distinct fingerprints is also the job that
+        # materializes the lazily pinned reps
+        sub = choose_hamming_sub_bands(reps, hash_col, max_hamming)
+        return hamming_band_pairs(
+            reps.select(F.col("rep_id").alias("doc_id"), hash_col),
+            "doc_id", hash_col, max_hamming, sub_bands=sub,
+        ).select("id_a", "id_b")
+
+    return _family_flags(hashed, hash_col, flag_name, edges)
 
 
 def signature_set_dedup_flags(
@@ -882,7 +887,6 @@ def signature_set_dedup_flags(
     flag_name: str = "is_dup",
     min_matches: int = 4,
     max_df: int = 256,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Set-matched near-dup pipeline over SUB-fingerprint arrays — the
     time-offset-robust half of the media dedup family (round 10,
@@ -898,72 +902,53 @@ def signature_set_dedup_flags(
     (ISMIR 2002): any surviving exact 32-bit block is a match
     candidate.
 
-    Scale shape: exact stage groups IDENTICAL sets to their min id in
-    ONE shuffle → per-value equi-join over DISTINCT sets only, with a
-    document-frequency cap (``max_df``): a sub-fingerprint shared by
-    more than ``max_df`` distinct sets is dropped from the join — such
-    values are non-discriminative (near-silence, black frames) AND are
-    exactly the hot keys that would make the join output quadratic;
-    the cap bounds per-key join output at ``max_df²`` — → shared-count
-    aggregation → threshold → large-star/small-star CC.  No cartesian,
-    no per-pair Python."""
-    from paradump_spark.operators.dedup import connected_components
+    Edges (:func:`_family_flags` core, non-empty sets only): a
+    per-value equi-join over DISTINCT sets with a document-frequency
+    cap (``max_df``): a sub-fingerprint shared by more than ``max_df``
+    distinct sets is dropped from the join — such values are
+    non-discriminative (near-silence, black frames) AND are exactly the
+    hot keys that would make the join output quadratic; the cap bounds
+    per-key join output at ``max_df²`` — → shared-count aggregation →
+    threshold.  No cartesian, no per-pair Python."""
 
-    h = _pin(sig_df, checkpoint)
-    ok = h.where(F.col("decode_error").isNull() & (F.size("sig") > 0))
-    reps = _pin(
-        ok.groupBy("sig").agg(F.min("doc_id").alias("rep_id")),
-        checkpoint,
-    )
-    elems = reps.select(
-        F.col("rep_id"),
-        F.size("sig").alias("__n"),
-        F.explode("sig").alias("__v"),
-    )
-    # df-cap: the hot-value list is tiny by construction (≤ one row per
-    # value above the cap) — broadcast anti-join
-    hot = (
-        elems.groupBy("__v")
-        .agg(F.count(F.lit(1)).alias("__df"))
-        .where(F.col("__df") > max_df)
-        .select("__v")
-    )
-    elems = elems.join(F.broadcast(hot), "__v", "left_anti")
-    a = elems.select(
-        "__v", F.col("rep_id").alias("id_a"), F.col("__n").alias("__na")
-    )
-    b = elems.select(
-        "__v", F.col("rep_id").alias("id_b"), F.col("__n").alias("__nb")
-    )
-    shared = (
-        a.join(b, "__v")
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b", "__na", "__nb")
-        .agg(F.count(F.lit(1)).alias("__shared"))
-    )
-    # cap the threshold by the smaller set so short clips can merge
-    # (the video_dedup_flags short-signature precedent, ADVICE r09)
-    eff_min = F.least(
-        F.col("__na"), F.col("__nb"), F.lit(min_matches)
-    )
-    edges = shared.where(F.col("__shared") >= eff_min).select("id_a", "id_b")
-    # no vertices — see perceptual_dedup_flags: the left join + coalesce
-    # below only needs edge-id labels
-    comp = connected_components(edges)
-    fam = reps.join(
-        comp.withColumnRenamed("id", "rep_id"), "rep_id", "left"
-    ).select(
-        "sig",
-        F.coalesce(F.col("component"), F.col("rep_id")).alias("__keeper"),
-    )
-    return h.join(fam, "sig", "left").select(
-        F.col("doc_id"),
-        F.col("sig"),
-        (
-            F.col("__keeper").isNotNull()
-            & (F.col("doc_id") != F.col("__keeper"))
-        ).alias(flag_name),
-        F.col("decode_error"),
+    def edges(reps):
+        elems = reps.select(
+            F.col("rep_id"),
+            F.size("sig").alias("__n"),
+            F.explode("sig").alias("__v"),
+        )
+        # df-cap: the hot-value list is tiny by construction (≤ one row
+        # per value above the cap) — broadcast anti-join
+        hot = (
+            elems.groupBy("__v")
+            .agg(F.count(F.lit(1)).alias("__df"))
+            .where(F.col("__df") > max_df)
+            .select("__v")
+        )
+        elems = elems.join(F.broadcast(hot), "__v", "left_anti")
+        a = elems.select(
+            "__v", F.col("rep_id").alias("id_a"), F.col("__n").alias("__na")
+        )
+        b = elems.select(
+            "__v", F.col("rep_id").alias("id_b"), F.col("__n").alias("__nb")
+        )
+        shared = (
+            a.join(b, "__v")
+            .where(F.col("id_a") < F.col("id_b"))
+            .groupBy("id_a", "id_b", "__na", "__nb")
+            .agg(F.count(F.lit(1)).alias("__shared"))
+        )
+        # cap the threshold by the smaller set so short clips can merge
+        # (the video_dedup_flags short-signature precedent, ADVICE r09)
+        eff_min = F.least(
+            F.col("__na"), F.col("__nb"), F.lit(min_matches)
+        )
+        return shared.where(F.col("__shared") >= eff_min).select(
+            "id_a", "id_b"
+        )
+
+    return _family_flags(
+        sig_df, "sig", flag_name, edges, valid=F.size("sig") > 0
     )
 
 
@@ -972,7 +957,6 @@ def image_dedup_flags(
     id_col: str = "doc_id",
     algo: str = "dhash",
     max_hamming: int = 4,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Every input row + ``is_image_dup``: true iff a lower-id image in
     the same near-dup family (transitive closure of Hamming ≤
@@ -982,9 +966,7 @@ def image_dedup_flags(
     :func:`perceptual_dedup_flags`.
     """
     h = image_perceptual_hash(binary_df, id_col, algo)
-    return perceptual_dedup_flags(
-        h, max_hamming, "is_image_dup", checkpoint=checkpoint
-    )
+    return perceptual_dedup_flags(h, max_hamming, "is_image_dup")
 
 
 def synthetic_image_corpus(
@@ -1457,7 +1439,6 @@ def audio_dedup_flags(
     binary_df: DataFrame,
     id_col: str = "doc_id",
     max_hamming: int = 4,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Every input row + ``is_audio_dup``: true iff a lower-id clip in
     the same near-dup family (transitive Hamming ≤ ``max_hamming`` on
@@ -1467,9 +1448,7 @@ def audio_dedup_flags(
     at :func:`perceptual_dedup_flags` — one exact-hash shuffle, a
     Hamming-band equi-join over distinct fingerprints, then CC."""
     h = audio_perceptual_hash(binary_df, id_col)
-    return perceptual_dedup_flags(
-        h, max_hamming, "is_audio_dup", checkpoint=checkpoint
-    )
+    return perceptual_dedup_flags(h, max_hamming, "is_audio_dup")
 
 
 # --- time-offset-robust audio matching (round 10, VERDICT r09
@@ -1577,7 +1556,6 @@ def audio_robust_dedup_flags(
     min_matches: int = 4,
     seg_ms: int = 20,
     max_df: int = 256,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Every input row + ``is_audio_dup``: TRIM/OFFSET-robust audio
     near-dup dedup — gain-scaled, resampled, requantized AND
@@ -1586,9 +1564,7 @@ def audio_robust_dedup_flags(
     min-id keeper).  Pipeline shape documented at
     :func:`signature_set_dedup_flags`."""
     sig = audio_robust_signatures(binary_df, id_col, seg_ms)
-    return signature_set_dedup_flags(
-        sig, "is_audio_dup", min_matches, max_df, checkpoint=checkpoint
-    )
+    return signature_set_dedup_flags(sig, "is_audio_dup", min_matches, max_df)
 
 
 def _encode_wav(samples, rate: int, bits: int = 16) -> bytes:
@@ -1927,7 +1903,6 @@ def video_dedup_flags(
     n_frames: int = 8,
     max_hamming: int = 4,
     min_matching: int | None = None,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Every input row + ``is_video_dup``: true iff a lower-id video in
     the same near-dup family exists, where two videos are near-dups
@@ -1936,27 +1911,12 @@ def video_dedup_flags(
     close transitively (connected components), lowest id is the kept
     representative.  Undecodable rows are never flagged.
 
-    Scale shape: signature (map-only) → exact stage groups IDENTICAL
-    signatures to their min id in ONE shuffle → slot-aligned
-    Hamming-band equi-join over DISTINCT signatures only (shuffle is
-    n_frames × bands rows per distinct signature) → zip_with slot
-    verification in the JVM → large-star/small-star CC over rep edges.
+    Edges (:func:`_family_flags` core): a slot-aligned Hamming-band
+    equi-join over the DISTINCT signatures (n_frames × bands shuffle
+    rows each), verified slot by slot with zip_with in the JVM.
     """
-    from paradump_spark.operators.dedup import connected_components
-
     if min_matching is None:
         min_matching = max(1, (3 * n_frames) // 4)
-    sig = video_signature(binary_df, id_col, n_frames)
-    # consumed three times (exact stage, flags join, rep mapping) —
-    # pin it so the Python hashing UDF runs once
-    sig = _pin(sig, checkpoint)
-    ok = sig.where(F.col("decode_error").isNull())
-    # reps is consumed four times (both band-join sides, CC vertices,
-    # rep mapping) — pin it like perceptual_dedup_flags does, or the
-    # exact-stage groupBy shuffle re-executes per consumer (round 11)
-    reps = _pin(
-        ok.groupBy("sig").agg(F.min("doc_id").alias("rep_id")), checkpoint
-    )
     # slot-aligned banding: (slot, band_idx, band_bits) keys; any pair
     # with ≥1 slot inside the Hamming budget shares ≥1 such key
     bands = max_hamming + 1
@@ -1975,29 +1935,6 @@ def video_dedup_flags(
                 seg.alias("v"),
             ).alias(f"__b{i}")
         )
-    banded = (
-        reps.select(
-            "rep_id",
-            "sig",
-            F.explode(
-                F.transform(
-                    F.col("sig"),
-                    lambda h, s: F.struct(s.alias("slot"), h.alias("h")),
-                )
-            ).alias("__s"),
-        )
-        .select("rep_id", "sig", F.explode(F.array(*bcols)).alias("__band"))
-    )
-    a = banded.select(
-        F.col("__band"),
-        F.col("rep_id").alias("id_a"),
-        F.col("sig").alias("__sa"),
-    )
-    b = banded.select(
-        F.col("__band"),
-        F.col("rep_id").alias("id_b"),
-        F.col("sig").alias("__sb"),
-    )
     matched = F.size(
         F.filter(
             F.zip_with(
@@ -2018,46 +1955,49 @@ def video_dedup_flags(
     eff_min = F.least(
         F.size(F.col("__sa")), F.size(F.col("__sb")), F.lit(min_matching)
     )
-    # Verify BEFORE the distinct, and distinct on the bare id pair —
-    # mirroring hamming_band_pairs.  The old shape deduplicated
-    # candidate pairs FIRST, shuffling both full sig arrays per
-    # candidate (~16x the bytes of an id pair); on clique-heavy corpora
-    # (one near-dup family of m distinct "edited" signatures shares
-    # identical values in the unchanged slots, so per-band-key
-    # occupancy grows with m and candidates with m²) that array-carrying
-    # distinct dominated the sf5 leg (3-point ledger r11: exp 1.77).
-    # zip_with slot verification is a cheap per-row JVM predicate —
-    # running it map-side on the join output and deduplicating verified
-    # bare pairs is the same final pair set (matched is a deterministic
-    # function of the joined row) with the heavy shuffle removed.  The
-    # merge hint is the hamming_band_pairs reasoning verbatim: banded
-    # sits downstream of the pinned sig frame, so Catalyst's size
-    # estimate is unreliable and must not pick a whole-corpus broadcast;
-    # SMJ spills both sides at any corpus size.
-    pairs = (
-        a.join(b.hint("merge"), "__band")
-        .where(F.col("id_a") < F.col("id_b"))
-        .where(matched >= eff_min)
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    # no vertices — see perceptual_dedup_flags: the left join + coalesce
-    # below only needs edge-id labels
-    comp = connected_components(pairs)
-    fam = reps.join(
-        comp.withColumnRenamed("id", "rep_id"), "rep_id", "left"
-    ).select(
-        "sig",
-        F.coalesce(F.col("component"), F.col("rep_id")).alias("__keeper"),
-    )
-    return sig.join(fam, "sig", "left").select(
-        F.col("doc_id"),
-        F.col("sig"),
-        (
-            F.col("__keeper").isNotNull()
-            & (F.col("doc_id") != F.col("__keeper"))
-        ).alias("is_video_dup"),
-        F.col("decode_error"),
+
+    def edges(reps):
+        banded = reps.select(
+            "rep_id",
+            "sig",
+            F.explode(
+                F.transform(
+                    F.col("sig"),
+                    lambda h, s: F.struct(s.alias("slot"), h.alias("h")),
+                )
+            ).alias("__s"),
+        ).select("rep_id", "sig", F.explode(F.array(*bcols)).alias("__band"))
+        a = banded.select(
+            F.col("__band"),
+            F.col("rep_id").alias("id_a"),
+            F.col("sig").alias("__sa"),
+        )
+        b = banded.select(
+            F.col("__band"),
+            F.col("rep_id").alias("id_b"),
+            F.col("sig").alias("__sb"),
+        )
+        # Verify BEFORE the distinct, and distinct on the bare id pair —
+        # mirroring hamming_band_pairs: deduplicating candidates first
+        # shuffled both full sig arrays per candidate (~16x the bytes of
+        # an id pair), which dominated the sf5 leg on clique-heavy
+        # corpora (3-point ledger r11: exp 1.77).  `matched` is a
+        # deterministic function of the joined row, so the final pair
+        # set is the same.  The merge hint is the hamming_band_pairs
+        # reasoning verbatim: banded sits downstream of a pin, so
+        # Catalyst's size estimate must not pick a whole-corpus
+        # broadcast; SMJ spills both sides at any corpus size.
+        return (
+            a.join(b.hint("merge"), "__band")
+            .where(F.col("id_a") < F.col("id_b"))
+            .where(matched >= eff_min)
+            .select("id_a", "id_b")
+            .distinct()
+        )
+
+    return _family_flags(
+        video_signature(binary_df, id_col, n_frames), "sig", "is_video_dup",
+        edges,
     )
 
 
@@ -2139,7 +2079,6 @@ def video_robust_dedup_flags(
     min_matches: int = 4,
     stride: int = 1,
     max_df: int = 256,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Every input row + ``is_video_dup``: TRIM/OFFSET-robust video
     near-dup dedup — a cut-down copy, or one with a prepended intro,
@@ -2149,9 +2088,7 @@ def video_robust_dedup_flags(
     dHash itself.  Pipeline shape documented at
     :func:`signature_set_dedup_flags`."""
     sig = video_frame_hash_signatures(binary_df, id_col, stride)
-    return signature_set_dedup_flags(
-        sig, "is_video_dup", min_matches, max_df, checkpoint=checkpoint
-    )
+    return signature_set_dedup_flags(sig, "is_video_dup", min_matches, max_df)
 
 
 def synthetic_audio_corpus_robust(

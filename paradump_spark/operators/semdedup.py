@@ -55,7 +55,9 @@ from pyspark.sql.types import LongType, StructField, StructType
 
 from ..functions import vectors as V
 from ..plans.topk import partial_topk
-from .similarity import _top_p_cogroup, ivf_assign, ivf_centroids, kmeans_refine
+from .similarity import (
+    _top_p_cogroup, _top_p_map, ivf_assign, ivf_centroids, kmeans_refine,
+)
 
 
 def assign_clusters(
@@ -173,7 +175,7 @@ def assign_clusters_two_level(
     through cell-keyed cogroups/joins.  Cluster ids are globally
     unique bigints; at most ``num_clusters`` distinct.
     """
-    _coarse, fine, ca = two_level_cells(
+    _coarse_rows, fine, ca = two_level_cells(
         emb, id_col, vec_col, num_clusters, coarse_cells,
         refine_iters, fine_refine_iters, seed,
     )
@@ -197,23 +199,30 @@ def two_level_cells(
     """The two-level quantizer behind :func:`assign_clusters_two_level`,
     exposed as a builder so other operators (the kNN-join's hierarchical
     probe path in ``operators/similarity.py``) can share it: returns
-    ``(coarse, fine, coarse_assigned)`` where ``coarse`` is the √k
-    coarse-centroid frame, ``fine`` the (cell_id, cluster_id, centroid)
-    fine table (None when the corpus is empty), and ``coarse_assigned``
-    the corpus labeled with its coarse ``cell_id`` (localCheckpoint'd —
-    safe to consume repeatedly).  Stage shapes documented on the
-    wrapper."""
+    ``(coarse_rows, fine, coarse_assigned)`` where ``coarse_rows`` are
+    the √k collected (cell_id, centroid) coarse Rows (collected once, so
+    a caller probes them without a second collect), ``fine`` the
+    (cell_id, cluster_id, centroid) fine table (None when the corpus is
+    empty), and ``coarse_assigned`` the corpus labeled with its coarse
+    ``cell_id`` (localCheckpoint'd — safe to consume repeatedly; a row
+    whose vector cannot be scored is left out).  Stage shapes
+    documented on the wrapper."""
     n_coarse = coarse_cells or max(8, round(num_clusters ** 0.5))
     coarse = ivf_centroids(emb, id_col, vec_col, n_coarse, seed=seed)
     if refine_iters:
         coarse = kmeans_refine(
             emb, coarse, id_col, vec_col, iters=refine_iters, seed=seed
         )
+    coarse_rows = coarse.collect()
     # materialized once: consumed by the count, the fine-seed sample,
     # each Lloyd iteration, and the final assignment — the argmax
     # expression is huge and Catalyst re-executes unchecked lineage per
     # consumer (see semantic_dedup's localCheckpoint note)
-    ca = ivf_assign(emb, coarse, id_col, vec_col).localCheckpoint(eager=True)
+    ca = (
+        _top_p_map(emb, coarse_rows, vec_col, 1)
+        .where(F.col("cell_id").isNotNull())
+        .localCheckpoint(eager=True)
+    )
 
     counts = {
         int(r["cell_id"]): int(r["n"])
@@ -221,7 +230,7 @@ def two_level_cells(
     }
     total = sum(counts.values())
     if not total:
-        return coarse, None, ca
+        return coarse_rows, None, ca
     budgets = _fine_budgets(counts, num_clusters)
     offsets, acc = {}, 0
     for c in sorted(budgets):
@@ -299,7 +308,7 @@ def two_level_cells(
             .localCheckpoint(eager=True)  # iters chain multiplies plans
         )
 
-    return coarse, fine, ca
+    return coarse_rows, fine, ca
 
 
 def _pair_block(base: DataFrame, threshold: float) -> DataFrame:

@@ -227,9 +227,22 @@ def _unit(m: np.ndarray) -> np.ndarray:
     return m / np.where(n == 0.0, 1.0, n)
 
 
-def _stack(vs: pd.Series) -> np.ndarray:
-    """An Arrow ``array<float>`` column batch as a float64 matrix."""
-    return np.array(vs.tolist(), dtype=np.float64)
+def _dim(*cols) -> int:
+    """The most common length of the non-NULL vectors in ``cols`` (ties
+    to the shorter; 0 when there is none): the width a vector needs to
+    be scored."""
+    lens = [len(v) for c in cols for v in c if v is not None]
+    return int(np.bincount(lens).argmax()) if lens else 0
+
+
+def _stack(vs, d: int) -> tuple[np.ndarray, np.ndarray]:
+    """The scoreable rows of an ``array<float>`` column batch: a boolean
+    mask over ``vs`` and the float64 ``mask.sum() × d`` matrix of those
+    rows.  A NULL or ragged (not ``d`` entries) vector is bad input
+    that becomes data — its row is left out, it never fails the job."""
+    ok = np.array([v is not None and len(v) == d for v in vs], dtype=bool)
+    rows = [v for v, keep in zip(vs, ok) if keep]
+    return ok, np.array(rows, dtype=np.float64).reshape(len(rows), d)
 
 
 def top_p(
@@ -269,12 +282,15 @@ def _top_p_map(df: DataFrame, rows, vec_col: str, p: int) -> DataFrame:
     normalized once on the driver and ships in the UDF closure; each
     Arrow batch is one matmul.  No shuffle.
 
-    ``p == 1`` labels every row (``cell_id`` NULL when there is no
-    centroid); ``p > 1`` replicates each row once per cell (no rows when
-    there is no centroid).  NULL centroids are skipped.
+    ``p == 1`` labels every row; ``p > 1`` replicates each row once per
+    cell.  A row whose vector is NULL or not as wide as the centroids,
+    or any row when there is no centroid, gets a NULL ``cell_id``
+    (``p == 1``) or no rows (``p > 1``).  NULL and ragged centroids are
+    skipped.
     """
+    d = _dim([r["centroid"] for r in rows])
     rows = sorted(
-        (r for r in rows if r["centroid"] is not None),
+        (r for r in rows if r["centroid"] is not None and len(r["centroid"]) == d),
         key=lambda r: int(r["cell_id"]),
     )
     if not rows:
@@ -285,10 +301,16 @@ def _top_p_map(df: DataFrame, rows, vec_col: str, p: int) -> DataFrame:
 
     @pandas_udf("int" if p == 1 else "array<int>")
     def cells(vs: pd.Series) -> pd.Series:
-        if not len(vs):
-            return pd.Series([], dtype="int32" if p == 1 else object)
-        top = ids[top_p(_unit(_stack(vs)), C, p)[0]]
-        return pd.Series(top[:, 0] if p == 1 else list(top))
+        ok, X = _stack(vs, d)
+        top = ids[top_p(_unit(X), C, p)[0]]
+        if p == 1:
+            out = pd.array([None] * len(vs), dtype="Int32")
+            out[ok] = top[:, 0]
+            return pd.Series(out)
+        out = [None] * len(vs)
+        for i, t in zip(np.flatnonzero(ok), top):
+            out[i] = t
+        return pd.Series(out, dtype=object)
 
     # The kernel IS deterministic — the marking exists to stop Catalyst
     # from re-evaluating it: constraint inference on a downstream join
@@ -330,23 +352,29 @@ def _top_p_cogroup(
     ``len(lpdf) × p`` right ids and cosines into output rows of
     ``schema``; a cell with no right rows passes zero-width arrays.
     ``exclude_key`` names a left column whose value must not be paired
-    with an equal ``right_id`` (a self-join's own row).
+    with an equal ``right_id`` (a self-join's own row).  Vectors that
+    are NULL or not of the cell's most common width (:func:`_dim`) are
+    left out on both sides: such a left row gives no output row.
     """
 
     def kernel(_key, lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
+        d = _dim(lpdf[left_vec], rpdf[right_vec])
+        lok, X = _stack(lpdf[left_vec], d)
+        lpdf = lpdf[lok]
         if not len(lpdf):
             return pd.DataFrame()
-        if not len(rpdf):
+        rok, R = _stack(rpdf[right_vec], d)
+        if not rok.any():
             none = np.empty((len(lpdf), 0), dtype=object)
             return emit(lpdf, none, np.empty((len(lpdf), 0)))
+        rpdf = rpdf[rok].reset_index(drop=True)
         rpdf = rpdf.sort_values(right_id, kind="mergesort")
         rids = rpdf[right_id].to_numpy()
         exclude = None
         if exclude_key is not None:
             exclude = lpdf[exclude_key].to_numpy()[:, None] == rids[None, :]
         order, score = top_p(
-            _unit(_stack(lpdf[left_vec])), _unit(_stack(rpdf[right_vec])),
-            p, exclude,
+            _unit(X), _unit(R[rpdf.index.to_numpy()]), p, exclude
         )
         return emit(lpdf, rids[order], score)
 
@@ -1177,7 +1205,7 @@ def knn_join(
     if coarse_cells:
         from paradump_spark.operators.semdedup import two_level_cells
 
-        coarse, fine, ca = two_level_cells(
+        coarse_rows, fine, ca = two_level_cells(
             right.select(F.col(rid).alias("__rid"), F.col(vec_col)),
             "__rid", vec_col, num_cells, coarse_cells,
             refine_iters=refine_iters, fine_refine_iters=1, seed=seed,
@@ -1215,17 +1243,18 @@ def knn_join(
             F.col("__rid").alias("neighbor_id"),
             F.col(vec_col).alias("__cv"),
         )
-        # queries: coarse probe (map-side kernel) → per-coarse fine
-        # ranking (cogrouped kernel) → global top-nprobe fine cells.
+        # queries: coarse probe (map-side kernel over the coarse rows
+        # two_level_cells already collected) → per-coarse fine ranking
+        # (cogrouped kernel) → global top-nprobe fine cells.
         # The ranking output is NARROW (no query vector): carrying the
         # vector replicates it ×nprobe as per-row Python lists — at 100k
         # queries × coarse_probe 4 × nprobe 4, 1.6M list materializations
         # plus their Arrow round-trip, measured as the dominant stage of
         # the sf5 knn leg (6.7 s of ~20 s, round 11).  The vector is
         # re-attached below with one keyed join instead.
-        qc = probe_cells(
+        qc = _top_p_map(
             left.select(F.col(lid).alias("query_id"), F.col(vec_col)),
-            coarse, vec_col, coarse_probe,
+            coarse_rows, vec_col, coarse_probe,
         )
         q = _top_p_cogroup(
             qc, fine, vec_col, "cluster_id", "centroid", nprobe,

@@ -114,6 +114,23 @@ def test_connected_components_driver_path_equals_distributed(spark):
     assert rounds_b and rounds_b[0] >= 1  # took the star rounds
     assert via_driver == via_stars
 
+    # vertices=None (the local-frame branch the media pipelines use),
+    # null ids on either side of an edge, self-loops
+    odd = spark.createDataFrame(
+        [(1, 2), (2, None), (None, 3), (4, 4), (3, 5), (None, None), (6, 6),
+         (6, 7)],
+        "id_a bigint, id_b bigint",
+    )
+    rounds_a, rounds_b = [], []
+    local = connected_components(odd, _rounds_out=rounds_a).collect()
+    stars = connected_components(
+        odd, _rounds_out=rounds_b, driver_edge_cap=0
+    ).collect()
+    assert rounds_a == [0] and rounds_b[0] >= 1
+    assert len(local) == len(stars) == 8  # one row per distinct id
+    key = lambda r: (r["id"] is None, r["id"] or 0)  # noqa: E731
+    assert sorted(local, key=key) == sorted(stars, key=key)
+
     s_edges = spark.createDataFrame(
         [("b", "c"), ("a", "b"), ("x", "y")], "id_a string, id_b string"
     )

@@ -567,6 +567,105 @@ def test_knn_join_flat_collects_centroids_once(spark, sf_dir):
     assert out.count() == 200
 
 
+def test_knn_join_two_level_collects_coarse_once(spark, sf_dir):
+    """The two-level path collects its coarse centroid frame ONCE, in
+    two_level_cells, and probes the queries with the same rows: two
+    collects per call (the coarse rows and the coarse cell counts)."""
+    from unittest.mock import patch
+
+    emb = _emb(spark, sf_dir).limit(100)
+    calls = []
+    orig = type(emb).collect
+
+    def counting(self):
+        calls.append(1)
+        return orig(self)
+
+    with patch.object(type(emb), "collect", counting):
+        out = SIM.knn_join(
+            emb, emb, "vec_id", "embedding", k=2, num_cells=8, nprobe=2,
+            coarse_cells=3,
+        )
+    assert len(calls) == 2
+    assert out.count() == 200
+
+
+def _with_bad_vectors(emb):
+    """``emb`` (vec_id, embedding) plus a NULL and a ragged vector."""
+    bad = emb.sparkSession.createDataFrame(
+        [(10**6, None), (10**6 + 1, [1.0, 2.0])], emb.schema
+    )
+    return emb.unionByName(bad)
+
+
+def _knn_rows(left, right, **kw):
+    return sorted(
+        (r.query_id, r.neighbor_id, r.rank, r.cosine)
+        for r in SIM.knn_join(
+            left, right, "vec_id", "embedding", k=3, **kw
+        ).collect()
+    )
+
+
+def test_top_p_map_null_and_ragged_vectors_become_data(spark, sf_dir):
+    """The map-side kernel scores only vectors as wide as the
+    centroids: a NULL or ragged vector gets a NULL cell_id from
+    ivf_assign, no rows from probe_cells and no rows from (flat)
+    knn_join — as a query or as a neighbor — and never fails the job."""
+    corpus = spark.createDataFrame(
+        [
+            (1, [1.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0]), (3, None),
+            (4, [1.0, 0.0]), (5, [0.0, 0.2, 1.0]),
+        ],
+        "id long, v array<float>",
+    )
+    cents = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0]), (2, [0.0, 0.0, 1.0])],
+        "cell_id int, centroid array<float>",
+    )
+    got = {r.id: r.cell_id for r in SIM.ivf_assign(corpus, cents, "id", "v").collect()}
+    assert got == {1: 0, 2: 1, 3: None, 4: None, 5: 2}
+    probed = sorted(
+        (r.id, r.cell_id) for r in SIM.probe_cells(corpus, cents, "v", 2).collect()
+    )
+    assert probed == [(1, 0), (1, 1), (2, 0), (2, 1), (5, 1), (5, 2)]
+
+    emb = _emb(spark, sf_dir).select("vec_id", "embedding").limit(60)
+    mixed = _with_bad_vectors(emb)
+    exact = dict(num_cells=4, nprobe=4, coarse_cells=0)
+    assert _knn_rows(mixed, mixed, **exact) == _knn_rows(emb, emb, **exact)
+
+
+def test_top_p_cogroup_null_and_ragged_vectors_become_data(spark, sf_dir):
+    """The cogrouped kernel leaves out vectors that are NULL or not of
+    the cell's common width, on both sides: such a row gets no row from
+    the fine assign, and the two-level knn_join over a corpus with bad
+    vectors equals the one without them."""
+    from paradump_spark.operators.semdedup import _fine_assign
+
+    ca = spark.createDataFrame(
+        [
+            (1, 0, [1.0, 0.0, 0.0]), (2, 0, None), (3, 0, [1.0, 0.0]),
+            (5, 0, [0.9, 0.1, 0.0]), (4, 1, [0.0, 1.0, 0.0]),
+        ],
+        "id long, cell_id int, v array<float>",
+    )
+    fine = spark.createDataFrame(
+        [
+            (0, 10, [1.0, 0.0, 0.0]), (0, 11, None), (0, 12, [0.0, 1.0]),
+            (1, 20, [0.0, 1.0, 0.0]),
+        ],
+        "cell_id int, cluster_id long, centroid array<float>",
+    )
+    got = {r.id: r.cluster_id for r in _fine_assign(ca, fine, "v").collect()}
+    assert got == {1: 10, 5: 10, 4: 20}
+
+    emb = _emb(spark, sf_dir).select("vec_id", "embedding").limit(60)
+    mixed = _with_bad_vectors(emb)
+    exact = dict(num_cells=4, nprobe=4, coarse_cells=2, coarse_probe=2)
+    assert _knn_rows(mixed, mixed, **exact) == _knn_rows(emb, emb, **exact)
+
+
 def test_knn_join_logs_geometry_decision(spark, sf_dir, monkeypatch, caplog):
     """One INFO record per knn_join names the path and where each input
     came from, on both sides of KNN_TWO_LEVEL_CELLS."""

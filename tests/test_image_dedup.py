@@ -318,3 +318,49 @@ def test_choose_sub_bands_fires_on_skew_not_uniform(spark, monkeypatch):
         for r in MM.perceptual_dedup_flags(ball, max_hamming=4).collect()
     }
     assert auto == single
+
+
+def test_choose_sub_bands_logs_decision(spark, monkeypatch, caplog):
+    """One INFO record per band-key decision names the level, the row
+    count, the thresholds it compared against and, when the occupancy
+    probe ran, its estimate — on both sides of each switch."""
+    import logging
+
+    df = spark.range(64).select(
+        F.col("id").alias("doc_id"), F.xxhash64("id").alias("phash")
+    )
+
+    def decide():
+        caplog.clear()
+        with caplog.at_level(logging.INFO, logger="paradump_spark"):
+            sub = MM.choose_hamming_sub_bands(df, "phash", 4)
+        (rec,) = [
+            r for r in caplog.records
+            if r.name == "paradump_spark" and r.msg.startswith("hamming")
+        ]
+        a = rec.args
+        assert a["sub_bands"] == sub
+        assert a["n_rows"] == 64
+        assert a["wide_keys_min"] == MM.HAMMING_WIDE_KEYS_MIN
+        assert a["probe_min_distinct"] == MM.HAMMING_PROBE_MIN_DISTINCT
+        assert a["pairs_per_row_switch"] == MM.HAMMING_PAIRS_PER_ROW_SWITCH
+        return a
+
+    # below the probe floor: single-level, no probe
+    a = decide()
+    assert (a["level"], a["est_candidate_pairs"]) == ("single", None)
+    # at the wide-keys size: two-level, no probe
+    monkeypatch.setattr(MM, "HAMMING_WIDE_KEYS_MIN", 64)
+    a = decide()
+    assert (a["level"], a["est_candidate_pairs"]) == ("two-level", None)
+    # the probe runs and decides on both sides of its switch
+    monkeypatch.setattr(MM, "HAMMING_WIDE_KEYS_MIN", 10**9)
+    monkeypatch.setattr(MM, "HAMMING_PROBE_MIN_DISTINCT", 1)
+    monkeypatch.setattr(MM, "HAMMING_PAIRS_PER_ROW_SWITCH", 10**9)
+    a = decide()
+    assert a["level"] == "single"
+    assert isinstance(a["est_candidate_pairs"], int)
+    monkeypatch.setattr(MM, "HAMMING_PAIRS_PER_ROW_SWITCH", 0)
+    a = decide()
+    assert a["level"] == "two-level" and a["sub_bands"] == 5
+    assert isinstance(a["est_candidate_pairs"], int)

@@ -433,37 +433,36 @@ def test_video_robust_corpus_planted(spark):
     assert all(rows[i].is_video_dup for i in cut + intro)
 
 
-def test_checkpoint_false_path_matches_default(spark):
-    """The 100 TB-shape knob (checkpoint=False: DISK_ONLY persists
-    instead of executor-heap localCheckpoints for the internal hash
-    pins, VERDICT r10 directive 10) is a storage decision, not a
-    semantic one — flags must match row-for-row on both pipeline
-    families (Hamming-band perceptual + set-matched robust)."""
-    ids = spark.range(50).selectExpr("id as doc_id")
-
-    img = MM.synthetic_image_corpus(ids, "doc_id", groups=8)
-    a = MM.image_dedup_flags(img, "doc_id").orderBy("doc_id").collect()
-    b = (
-        MM.image_dedup_flags(img, "doc_id", checkpoint=False)
-        .orderBy("doc_id")
-        .collect()
-    )
-    assert a == b
-
-    vid = MM.synthetic_video_corpus_robust(ids, "doc_id", groups=8)
-    a = (
-        MM.video_robust_dedup_flags(vid, "doc_id")
-        .select("doc_id", "is_video_dup")
-        .orderBy("doc_id")
-        .collect()
-    )
-    b = (
-        MM.video_robust_dedup_flags(vid, "doc_id", checkpoint=False)
-        .select("doc_id", "is_video_dup")
-        .orderBy("doc_id")
-        .collect()
-    )
-    assert a == b
+def test_media_dedup_leaves_session_cache_empty(spark):
+    """Every media dedup pipeline pins its frames with localCheckpoints
+    that belong to the returned frame: a counted result leaves the
+    session's CacheManager empty (a ``persist`` that is never released
+    would stay in it for the rest of the session)."""
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    ids = spark.range(40).selectExpr("id as doc_id")
+    runs = {
+        "image": lambda: MM.image_dedup_flags(
+            MM.synthetic_image_corpus(ids, "doc_id", groups=8), "doc_id"
+        ),
+        "audio": lambda: MM.audio_dedup_flags(
+            MM.synthetic_audio_corpus(ids, "doc_id", groups=8), "doc_id"
+        ),
+        "video": lambda: MM.video_dedup_flags(
+            MM.synthetic_video_corpus(ids, "doc_id", groups=8), "doc_id"
+        ),
+        "audio_robust": lambda: MM.audio_robust_dedup_flags(
+            MM.synthetic_audio_corpus_robust(ids, "doc_id", groups=8),
+            "doc_id",
+        ),
+        "video_robust": lambda: MM.video_robust_dedup_flags(
+            MM.synthetic_video_corpus_robust(ids, "doc_id", groups=8),
+            "doc_id",
+        ),
+    }
+    for name, run in runs.items():
+        assert run().count() == 40, name
+        assert cache.isEmpty(), name
 
 
 # ---------------------------------------------------------------------------

@@ -1,11 +1,14 @@
-"""Round-12 media-pipeline probe: per-query wall time + Spark job count
-+ shuffle bytes for the five bench media dedup steps, reproduced with
-the bench's exact session/corpus shape (scratch parquet, 1 MB splits,
-checkpoint=False, bounded reader).  Evidence harness for VERDICT r11
-directive 1 ("fewer driver job submissions") — run before and after a
-change; the job counts come from tools/jobstats.py (AppStatusStore).
+"""Media-pipeline probe: per-query wall time, Spark job count, shuffle
+bytes and session cache state for the five bench media dedup steps,
+reproduced with the bench's session/corpus shape (scratch parquet, 1 MB
+splits, bounded reader).  Run it on a change and on its parent: the job
+counts come from tools/jobstats.py (AppStatusStore), and
+``cache_empty`` is the session CacheManager's ``isEmpty()`` after each
+step's runs (an operator that leaves cached blocks behind reads false).
 
 Usage: python tools/r12_media_probe.py [runs] [queries...]
+Environment: SPARK_GRAFT_CPUS (local[N] and shuffle partitions, default
+32), SPARK_GRAFT_SF_DIR (documents.parquet source, default sf0.1).
 """
 
 import json
@@ -35,6 +38,7 @@ def main():
     )
     from paradump_spark.operators import multimodal as MMOD
 
+    cache = spark._jsparkSession.sharedState().cacheManager()
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     docs.count()  # session warmup
     media_ids = docs.select("doc_id").repartition(int(CPUS))
@@ -48,19 +52,19 @@ def main():
     steps = {}
     img, imgb = corpus("img", MMOD.synthetic_image_corpus)
     steps["image_dedup"] = (imgb, lambda: MMOD.image_dedup_flags(
-        img, "doc_id", algo="dhash", max_hamming=4, checkpoint=False).count())
+        img, "doc_id", algo="dhash", max_hamming=4).count())
     aud, audb = corpus("aud", MMOD.synthetic_audio_corpus)
     steps["audio_dedup"] = (audb, lambda: MMOD.audio_dedup_flags(
-        aud, "doc_id", max_hamming=4, checkpoint=False).count())
+        aud, "doc_id", max_hamming=4).count())
     vid, vidb = corpus("vid", MMOD.synthetic_video_corpus)
     steps["video_dedup"] = (vidb, lambda: MMOD.video_dedup_flags(
-        vid, "doc_id", n_frames=8, checkpoint=False).count())
+        vid, "doc_id", n_frames=8).count())
     aur, aurb = corpus("aur", MMOD.synthetic_audio_corpus_robust)
     steps["audio_dedup_robust"] = (aurb, lambda: MMOD.audio_robust_dedup_flags(
-        aur, "doc_id", checkpoint=False).count())
+        aur, "doc_id").count())
     vir, virb = corpus("vir", MMOD.synthetic_video_corpus_robust)
     steps["video_dedup_robust"] = (virb, lambda: MMOD.video_robust_dedup_flags(
-        vir, "doc_id", checkpoint=False).count())
+        vir, "doc_id").count())
 
     out = {}
     try:
@@ -81,6 +85,7 @@ def main():
                 "jobs": stats["jobs"],
                 "shuffle_read": stats["shuffle_read"],
                 "shuffle_write": stats["shuffle_write"],
+                "cache_empty": bool(cache.isEmpty()),
             }
             print(json.dumps({name: out[name]}))
     finally:
