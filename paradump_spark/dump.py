@@ -46,7 +46,8 @@ class DumpOptions:
     compression: str | None = None
     compression_level: int = 1  # ref -dumpcompresslevel default (:3498)
     excludes: list[str] = field(default_factory=list)
-    count_rows: bool = False  # extra pass per table when True
+    # extra pass per table when True; sql mode reports rows without one
+    count_rows: bool = False
 
 
 def dump_tables(
@@ -74,8 +75,10 @@ def dump_tables(
         df = catalog.load(name)
         meta = catalog.meta(name, df)
         path: str | None = os.path.join(out_dir, name)
+        rows = None
         if options.mode == "sql":
-            write_sql_inserts(
+            # the statement framing counts every partition: the total is free
+            rows = write_sql_inserts(
                 df,
                 name,
                 path,
@@ -108,7 +111,8 @@ def dump_tables(
         elif options.mode == "nul":
             write_noop(df)
             path = None
-        rows = df.count() if options.count_rows else None
+        if rows is None and options.count_rows:
+            rows = df.count()
         results.append(DumpResult(name, options.mode, path, rows))
     return results
 

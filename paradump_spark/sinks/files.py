@@ -1,11 +1,12 @@
 """File sinks — the Spark restatement of the reference's writer stages:
 
 * K1 SQL-insert files — dataChunkGeneratorSql src/paradump/paradump.go:2707-3056
-  + tableFileWriter :3196-3420.  Rendering is a JVM-side expression
-  (functions.render.values_tuple); only the ≤``insertsize``-row statement
-  batching runs in Arrow-batched pandas (string joins, no row loop over
-  cells).  One output file per partition replaces the reference's ``%p``
-  per-writer-thread file naming (:3207-3215).
+  + tableFileWriter :3196-3420.  Rendering and statement framing are one
+  JVM-side expression per row (functions.render.values_tuple plus the
+  header / ``INSERT … VALUES`` prefix / ``,`` or ``;`` decided from the
+  row's position in its partition), written by the plain text writer —
+  no row crosses to Python.  One output file per partition replaces the
+  reference's ``%p`` per-writer-thread file naming (:3207-3215).
 * K2 CSV files — :3059-3171; fast path = Spark's native CSV writer, exact
   path = functions.render.csv_line → text writer (reference ``\\N``/empty
   NULL convention is per-column-kind, which the native writer can't do).
@@ -28,17 +29,23 @@ files per partition, codec-parallel.
 
 from __future__ import annotations
 
-from typing import Iterator
+import logging
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from paradump_spark.functions.render import csv_line, values_tuple
 from paradump_spark.meta import TableMeta
 
+log = logging.getLogger("paradump_spark")
+
 # ref header: src/paradump/paradump.go:1779-1787
 SQL_FILE_HEADER = "SET NAMES utf8mb4;\nSET TIME_ZONE='+00:00';"
+
+#: ``monotonically_increasing_id()`` holds a row's position within its
+#: partition in the low 33 bits and the partition index above them.
+_POS_BITS = 33
 
 
 def rendered_tuples(
@@ -69,18 +76,33 @@ def write_sql_inserts(
     header: bool = True,
     mode: str = "overwrite",
     partitions: int | None = None,
-) -> None:
+) -> int:
     """K1: multi-row ``INSERT INTO t (cols) VALUES (…),(…);`` text files.
 
     ``insertsize`` rows per statement (ref default 500, :3490); header
-    lines at the start of each file (ref :1779-1787).  The heavy per-cell
-    rendering happens in codegen *before* mapInPandas; Python only joins
-    pre-rendered tuple strings.
+    lines at the start of each file (ref :1779-1787).  One output line per
+    row: a single codegen'd expression renders the row's VALUES tuple and
+    frames it — the file header before a partition's first row, the
+    ``INSERT … VALUES`` prefix before every ``insertsize``-th row, and
+    ``;`` after a statement's last row (``,`` after every other).  The
+    last row of a partition is known from its row count, taken first by
+    :func:`_partition_counts`; a row past that count fails the job
+    instead of leaving a statement unterminated.  No row leaves the JVM.
+
+    The count and the write must see the same partitions.  A plan with an
+    exchange may not (AQE can coalesce the pruned count differently), so
+    such an input — ``partitions=``, a limit, a join or an aggregate — is
+    pinned with ``localCheckpoint`` first; a plain scan is read twice.
+    The input must produce the same rows on both reads.
 
     ``partitions`` repartitions before rendering — use when the input is
     a single file/row-group so the render runs N-wide (the reference's N
     parallel readers); leave None when the scan already has splits.
+
+    Returns the number of rows written.
     """
+    if insertsize < 1:
+        raise ValueError(f"insertsize must be positive, got {insertsize}")
     # identifier quoting must follow the dialect like the cell rendering
     # does: backtick-quoted identifiers are a MySQL-ism that PostgreSQL
     # and MSSQL (QUOTED_IDENTIFIER, the default) reject
@@ -89,34 +111,96 @@ def write_sql_inserts(
     prefix = f"INSERT INTO {iq}{table_name}{iq} ({cols_sql}) VALUES\n"
     if partitions:
         df = df.repartition(partitions)
-    rendered = rendered_tuples(df, meta, dialect)
-    out_schema = T.StructType([T.StructField("line", T.StringType())])
 
-    def to_statements(it: Iterator) -> Iterator:
-        import pandas as pd
+    def with_ids(df: DataFrame) -> DataFrame:
+        # the id gets its own projection, evaluated once per row: the
+        # framing reads it several times, and each copy of the expression
+        # would keep its own counter
+        return rendered_tuples(df, meta, dialect).select(
+            "v", F.monotonically_increasing_id().alias("id")
+        )
 
-        first = True
-        buf: list[str] = []
-        for pdf in it:
-            vals = pdf["v"].tolist()
-            lines: list[str] = []
-            if first and header:
-                lines.append(SQL_FILE_HEADER)
-                first = False
-            for v in vals:
-                buf.append(v)
-                if len(buf) >= insertsize:
-                    lines.append(prefix + ",\n".join(buf) + ";")
-                    buf.clear()
-            if lines:
-                yield pd.DataFrame({"line": lines})
-        if buf:
-            yield pd.DataFrame({"line": [prefix + ",\n".join(buf) + ";"]})
-
-    out = rendered.mapInPandas(to_statements, out_schema)
+    ided = with_ids(df)
+    exchange = _exchange_node(ided)
+    if exchange:
+        df = df.localCheckpoint(eager=True)
+        ided = with_ids(df)
+    counts = _partition_counts(df)
+    log.info(
+        "sql insert framing %(path)s: %(reason)s "
+        "(partitions with rows=%(partitions)s)",
+        {
+            "path": "pinned" if exchange else "scan",
+            "reason": f"plan has {exchange}" if exchange else "plan has no exchange",
+            "partitions": sum(1 for c in counts if c),
+        },
+    )
+    part = F.shiftright("id", _POS_BITS)
+    pos = F.col("id").bitwiseAND(F.lit((1 << _POS_BITS) - 1))
+    count = F.try_element_at(
+        F.lit(np.array(counts, dtype=np.int64)), part.cast("int") + 1
+    )
+    last = (pos % insertsize == insertsize - 1) | (pos == count - 1)
+    line = F.concat(
+        *([F.when(pos == 0, F.lit(SQL_FILE_HEADER + "\n")).otherwise("")]
+          if header else []),
+        F.when(pos % insertsize == 0, F.lit(prefix)).otherwise(""),
+        F.col("v"),
+        F.when(last, F.lit(";")).otherwise(","),
+    )
+    out = ided.select(
+        F.when(F.coalesce(pos < count, F.lit(False)), line)
+        .otherwise(F.raise_error(F.concat(
+            F.lit(f"write_sql_inserts({table_name}): partition "),
+            part.cast("string"),
+            F.lit(" has more rows than its count; the input changed between reads"),
+        )))
+        .alias("line")
+    )
+    # one statement spans many lines: a session-level maxRecordsPerFile
+    # would cut it in two files
     _commit_text(
-        out.write.mode(mode), out, path, compression, compression_level, "text"
+        out.write.mode(mode).option("maxRecordsPerFile", 0), out, path,
+        compression, compression_level, "text",
     )  # K3: zstd falls back to the pyarrow finalize pass without natives
+    return sum(counts)
+
+
+def _exchange_node(df: DataFrame) -> str | None:
+    """Name of the first exchange in ``df``'s physical plan, or None.
+
+    Under AQE the exchanges sit in the adaptive plan's ``initialPlan``."""
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if "Exchange" in name:
+            return name
+        if name == "AdaptiveSparkPlan":
+            stack.append(node.initialPlan())
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return None
+
+
+def _partition_counts(df: DataFrame) -> list[int]:
+    """Rows in each partition of ``df``, indexed by partition, up to the
+    last partition that holds rows.
+
+    One column-free job: ``coalesce(1)`` gives it one stage and one task
+    and no shuffle, so that task reads every split's row-group metadata
+    (a file scan) serially — footers only, no column data."""
+    rows = (
+        df.select(F.spark_partition_id().alias("p"))
+        .coalesce(1)
+        .groupBy("p")
+        .count()
+        .collect()
+    )
+    counts = [0] * (max((r["p"] for r in rows), default=-1) + 1)
+    for r in rows:
+        counts[r["p"]] = r["count"]
+    return counts
 
 
 def write_csv(
@@ -189,18 +273,27 @@ def write_jsonl(
 _HADOOP_TEXT_CODECS = ("gzip", "bzip2", "deflate", "none")
 
 
+#: applicationId -> whether that SparkContext's JVM has the Hadoop zstd
+#: codec.  Native codecs cannot appear in a running JVM, so one probe per
+#: context is enough; a failed probe costs tens of ms of py4j per write.
+_HADOOP_ZSTD: dict[str, bool] = {}
+
+
 def _hadoop_zstd_available(spark) -> bool:
     """True when the JVM can actually construct the Hadoop zstd codec
-    (needs libhadoop + libzstd natives; absent in plain pyspark installs)."""
-    try:
-        jvm = spark.sparkContext._jvm
-        conf = spark.sparkContext._jsc.hadoopConfiguration()
-        codec = jvm.org.apache.hadoop.io.compress.ZStandardCodec()
-        codec.setConf(conf)
-        codec.createOutputStream(jvm.java.io.ByteArrayOutputStream())
-        return True
-    except Exception:  # noqa: BLE001 — any JVM failure means "no native codec"
-        return False
+    (needs libhadoop + libzstd natives; absent in plain pyspark installs).
+    Probed once per SparkContext."""
+    sc = spark.sparkContext
+    app = sc.applicationId
+    if app not in _HADOOP_ZSTD:
+        try:
+            codec = sc._jvm.org.apache.hadoop.io.compress.ZStandardCodec()
+            codec.setConf(sc._jsc.hadoopConfiguration())
+            codec.createOutputStream(sc._jvm.java.io.ByteArrayOutputStream())
+            _HADOOP_ZSTD[app] = True
+        except Exception:  # noqa: BLE001 — any JVM failure means "no native codec"
+            _HADOOP_ZSTD[app] = False
+    return _HADOOP_ZSTD[app]
 
 
 def zstd_compress_files(

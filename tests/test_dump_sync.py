@@ -33,6 +33,23 @@ def test_dump_sql_mode(catalog, tmp_path):
     assert txt.count("INSERT INTO `nation`") == 3  # 25 rows / 10
 
 
+def test_dump_sql_rows_come_from_the_framing_counts(catalog, spark, tmp_path):
+    """sql mode fills DumpResult.rows from write_sql_inserts' partition
+    counts: count_rows=True runs no extra job."""
+    from tools.jobstats import job_group
+
+    jobs = {}
+    for count_rows in (False, True):
+        with job_group(spark, f"dump_rows_{count_rows}") as jg:
+            (res,) = dump_tables(
+                catalog, str(tmp_path / str(count_rows)), tables=["nation"],
+                options=DumpOptions(mode="sql", count_rows=count_rows),
+            )
+        assert res.rows == 25
+        jobs[count_rows] = jg.stats["jobs"]
+    assert jobs[True] == jobs[False]
+
+
 def test_dump_mode_validation(catalog, tmp_path):
     with pytest.raises(ValueError):
         dump_tables(catalog, str(tmp_path), options=DumpOptions(mode="bogus"))

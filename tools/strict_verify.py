@@ -4,16 +4,18 @@ Runs every in-window queries() entry (plus extras with --all) against its
 DuckDB oracle at a given sf dir, mimicking the driver's compare: row
 count, sorted-column schema, and value parity on row-sorted frames.
 
-Usage:  python scratch/strict_verify.py [sf_dir] [--all] [names...]
+Usage:  python tools/strict_verify.py [sf_dir] [--all] [names...]
 """
 
 import sys
+from pathlib import Path
 
 import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# this checkout's code, wherever it lives
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 import __spark_entry__ as E  # noqa: E402
 from paradump_spark.session import get_session  # noqa: E402
 
