@@ -795,7 +795,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.command == "db-sync":
         import tempfile
 
-        from paradump_spark.operators.diff import diff_classified
+        from paradump_spark.operators.diff import _disk_pin, diff_classified, dml_counts
         from paradump_spark.sinks.dml import DmlTemplates, apply_diff
         from paradump_spark.sources.jdbc import single_tx_export
 
@@ -811,20 +811,14 @@ def main(argv: list[str] | None = None) -> int:
             batch_rows=args.batch_rows,
         )
         src = spark.read.parquet(args.source_parquet)
-        drift = diff_classified(
-            src, spark.read.parquet(snap), pk, keep_noops=False
+        # pinned: the count below runs the join once, --apply reads its output
+        drift = _disk_pin(
+            diff_classified(src, spark.read.parquet(snap), pk, keep_noops=False)
         )
-        from pyspark.sql import functions as F
-
-        by_kind = {
-            r["dmltype"]: r["cnt"]
-            for r in drift.groupBy("dmltype")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()
-        }
+        by_kind = dml_counts(drift)
         total = sum(by_kind.values())
-        for kind in ("I", "U", "D"):
-            print(f"db-sync {args.table} {kind}={by_kind.get(kind, 0)}")
+        for kind, n in by_kind.items():
+            print(f"db-sync {args.table} {kind}={n}")
         if total == 0:
             print(f"db-sync {args.table} converged")
             return 0

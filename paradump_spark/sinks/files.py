@@ -30,6 +30,7 @@ files per partition, codec-parallel.
 from __future__ import annotations
 
 import logging
+import re
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -88,6 +89,8 @@ def write_sql_inserts(
     last row of a partition is known from its row count, taken first by
     :func:`_partition_counts`; a row past that count fails the job
     instead of leaving a statement unterminated.  No row leaves the JVM.
+    A partition without rows leaves no file, unless the table has no rows
+    at all; then its one empty ``part-00000`` stays.
 
     The count and the write must see the same partitions.  A plan with an
     exchange may not (AQE can coalesce the pruned count differently), so
@@ -157,13 +160,33 @@ def write_sql_inserts(
         )))
         .alias("line")
     )
+    fs, before = _list_dir(out.sparkSession, path)
     # one statement spans many lines: a session-level maxRecordsPerFile
     # would cut it in two files
     _commit_text(
         out.write.mode(mode).option("maxRecordsPerFile", 0), out, path,
         compression, compression_level, "text",
     )  # K3: zstd falls back to the pyarrow finalize pass without natives
+    if sum(counts):
+        # Spark writes part-00000 even when partition 0 is empty: a file
+        # without the header would pass for a dump file.  A 0-row table
+        # keeps it, so that its dump directory still has one file.
+        _, after = _list_dir(out.sparkSession, path)
+        for name in after.keys() - before.keys():
+            m = re.match(r"part-(\d+)", name)
+            if m and not (int(m[1]) < len(counts) and counts[int(m[1])]):
+                fs.delete(after[name], False)
     return sum(counts)
+
+
+def _list_dir(spark, path: str):
+    """The Hadoop FileSystem of ``path`` and ``{name: Path}`` of the files
+    directly under it (empty when ``path`` does not exist yet)."""
+    root = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    fs = root.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    if not fs.exists(root):
+        return fs, {}
+    return fs, {st.getPath().getName(): st.getPath() for st in fs.listStatus(root)}
 
 
 def _exchange_node(df: DataFrame) -> str | None:
@@ -398,8 +421,6 @@ def render_file_template(
     (``dump_%d_%t_%p%m%z``, src/paradump/paradump.go:3207-3215):
     ``%d`` db, ``%t`` table, ``%p`` writer/partition id, ``%m`` ``.mode``,
     ``%z`` compression suffix, ``%%`` literal percent."""
-    import re
-
     ext = {"zstd": ".zst", "gzip": ".gz", "bzip2": ".bz2", "lz4": ".lz4"}.get(
         compression or "", ""
     )

@@ -5,8 +5,12 @@ table between a source and destination catalog, report per-table stats
 connection factory (K6).
 
 The reference's seven-stage goroutine pipeline (browser → src/dst readers
-→ comparators → generators → writers) collapses into one full-outer-join
-job per table; Spark's scheduler replaces the channel plumbing.
+→ comparators → generators → writers) collapses into one full-outer join
+per table; Spark's scheduler replaces the channel plumbing.  Like the
+reference's single comparator walk feeding both the stats monitor and the
+DML generators, each join runs once: its classified output is pinned to
+disk, the report's first action writes it, and the DML apply reads it
+back without scanning or shuffling either side again.
 """
 
 from __future__ import annotations
@@ -18,7 +22,7 @@ from typing import Callable
 from pyspark.sql import DataFrame
 
 from paradump_spark.catalog import TESTDATA_PRIMARY_KEYS, ParquetCatalog
-from paradump_spark.operators.diff import diff_classified, diff_stats
+from paradump_spark.operators.diff import _disk_pin, diff_classified, diff_stats
 from paradump_spark.sinks.dml import ApplyOptions, DmlTemplates, apply_diff
 
 
@@ -37,7 +41,7 @@ class SyncOptions:
 @dataclass
 class TableSync:
     table: str
-    classified: DataFrame  # pk…, dmltype, payload…
+    classified: DataFrame  # pk…, dmltype, payload…; disk-pinned
     stats: DataFrame  # (table, phase, action, cnt)
 
 
@@ -48,8 +52,15 @@ def sync_tables(
     primary_keys: dict[str, list[str]] | None = None,
     options: SyncOptions | None = None,
 ) -> list[TableSync]:
-    """Diff every table present in both catalogs; returns lazy per-table
-    classified frames + stats (nothing executes until consumed)."""
+    """Diff every table present in both catalogs; returns per-table
+    classified frames + stats.
+
+    Each classified frame is pinned to local disk (``operators.diff._disk_pin``).
+    Under AQE the pin runs each join's shuffle map stages here, at call
+    time (both sides are scanned once); the first action on the frame or
+    its stats — usually ``sync_report(...).collect()`` — runs the join and
+    writes the blocks, and every later one (:func:`apply_syncs`) reads
+    them.  The blocks are freed with the returned frames."""
     options = options or SyncOptions()
     pks = primary_keys or TESTDATA_PRIMARY_KEYS
     names = tables or [
@@ -78,6 +89,7 @@ def sync_tables(
             classified = diff_classified(
                 src.load(name), dst.load(name), pk, keep_noops=options.keep_noops_in_stats
             )
+        classified = _disk_pin(classified)
         out.append(TableSync(name, classified, diff_stats(classified, name)))
     return out
 

@@ -12,6 +12,7 @@ from paradump_spark.operators.diff import (
     diff_stats,
     diff_tables,
 )
+from tools.jobstats import job_group
 
 
 def _perturb(cust):
@@ -33,9 +34,19 @@ def test_identical_inputs_diff_empty(spark, sf_dir):
 
 
 def test_perturbed_classification_counts(spark, sf_dir):
+    """Counts per class, in one action: the full-outer join runs once.
+    AQE is off for the call because it makes every shuffle stage a job of
+    its own; without it, one action is exactly one job."""
     cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
     res = diff_tables(cust, _perturb(cust), ["c_custkey"])
-    counts = res.counts()
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        with job_group(spark, "diff_counts"):
+            counts = res.counts()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert len(spark.sparkContext.statusTracker().getJobIdsForGroup("diff_counts")) == 1
     keys = [r["c_custkey"] for r in cust.select("c_custkey").collect()]
     exp_ins = sum(1 for k in keys if k % 10 == 0)
     exp_del = sum(1 for k in keys if k % 13 == 0)

@@ -7,15 +7,72 @@ import sqlite3
 import pytest
 from pyspark.sql import functions as F
 
-from paradump_spark.catalog import ParquetCatalog
+from paradump_spark import sync as SYNC
+from paradump_spark.catalog import TESTDATA_PRIMARY_KEYS, ParquetCatalog
 from paradump_spark.dump import DumpOptions, dump_tables
 from paradump_spark.sources.jdbc import guess_primary_key
 from paradump_spark.sync import SyncOptions, apply_syncs, sync_report, sync_tables
+from tools.jobstats import job_group
+
+_SQLITE_TYPES = {"bigint": "INTEGER", "int": "INTEGER", "double": "REAL", "string": "TEXT"}
 
 
 @pytest.fixture()
 def catalog(spark, sf_dir):
     return ParquetCatalog(spark, sf_dir)
+
+
+def perturbed_destination(spark, cat, tmp_path, tables):
+    """A destination that differs from ``cat`` on ``tables`` (each keyed
+    by its first column, with an ``*_acctbal`` column): every 10th key is
+    missing (an INSERT), every 7th of the rest has a changed balance (an
+    UPDATE), every 13th is copied under key + 1e6 (a DELETE).  The same
+    rows go to a parquet catalog, the diff's destination side, and to a
+    sqlite DB, where the DML lands.
+
+    Returns (catalog, sqlite path, {table: columns}, {table: expected
+    report {action: cnt}})."""
+    db = str(tmp_path / "dst.db")
+    con = sqlite3.connect(db)
+    columns, report = {}, {}
+    for t in tables:
+        src = cat.load(t)
+        key = TESTDATA_PRIMARY_KEYS[t][0]
+        bal = next(c for c in src.columns if c.endswith("acctbal"))
+        k = F.col(key)
+        dst = src.where(k % 10 != 0).withColumn(
+            bal, F.when(k % 7 == 0, F.col(bal) + 100.0).otherwise(F.col(bal))
+        ).unionByName(src.where(k % 13 == 0).withColumn(key, k + 1_000_000))
+        dst.coalesce(1).write.parquet(str(tmp_path / "dstcat" / f"{t}.parquet"))
+        ddl = ", ".join(
+            f"{f.name} {_SQLITE_TYPES[f.dataType.simpleString()]}"
+            + (" PRIMARY KEY" if f.name == key else "")
+            for f in src.schema.fields
+        )
+        con.execute(f"CREATE TABLE {t} ({ddl})")
+        con.executemany(
+            f"INSERT INTO {t} VALUES ({', '.join('?' * len(src.columns))})",
+            [tuple(r) for r in dst.collect()],
+        )
+        columns[t] = src.columns
+        keys = [r[0] for r in src.select(key).collect()]
+        ins = sum(1 for v in keys if v % 10 == 0)
+        upd = sum(1 for v in keys if v % 7 == 0 and v % 10 != 0)
+        report[t] = {"Insert": ins, "Update": upd,
+                     "Delete": sum(1 for v in keys if v % 13 == 0),
+                     "NoOp": len(keys) - ins - upd}
+    con.commit()
+    con.close()
+    return ParquetCatalog(spark, str(tmp_path / "dstcat")), db, columns, report
+
+
+def assert_converged(cat, db, tables):
+    con = sqlite3.connect(db)
+    for t in tables:
+        key = TESTDATA_PRIMARY_KEYS[t][0]
+        got = con.execute(f"SELECT * FROM {t} ORDER BY {key}").fetchall()
+        assert got == sorted(tuple(r) for r in cat.load(t).collect()), t
+    con.close()
 
 
 def test_dump_sql_mode(catalog, tmp_path):
@@ -36,8 +93,6 @@ def test_dump_sql_mode(catalog, tmp_path):
 def test_dump_sql_rows_come_from_the_framing_counts(catalog, spark, tmp_path):
     """sql mode fills DumpResult.rows from write_sql_inserts' partition
     counts: count_rows=True runs no extra job."""
-    from tools.jobstats import job_group
-
     jobs = {}
     for count_rows in (False, True):
         with job_group(spark, f"dump_rows_{count_rows}") as jg:
@@ -117,6 +172,80 @@ def test_sync_apply_converges_sqlite(spark, sf_dir, catalog, tmp_path):
         "SELECT * FROM customer ORDER BY c_custkey"
     ).fetchall()
     assert got == sorted(tuple(r) for r in cust.collect())
+
+
+def test_sync_report_then_apply_reads_the_disk_pin(spark, catalog, tmp_path,
+                                                   monkeypatch):
+    """sync_tables pins each classified frame on disk.  The report's
+    collect runs the join and writes the blocks; apply_syncs' input then
+    reads them back: its executed plan has no file scan, no exchange and
+    no join.  Nothing enters the session's CacheManager."""
+    dst_cat, db, columns, report = perturbed_destination(
+        spark, catalog, tmp_path, ["customer"]
+    )
+    [s] = sync_tables(catalog, dst_cat, tables=["customer"])
+    pinned = s.classified._jdf.queryExecution().analyzed().rdd()
+    level = pinned.getStorageLevel()
+    assert level.useDisk() and not level.useMemory()
+
+    rep = {r["action"]: r["cnt"] for r in sync_report([s]).collect()}
+    assert rep == report["customer"]
+    [info] = [i for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+              if i.id() == pinned.id()]
+    assert info.numCachedPartitions() == info.numPartitions() > 0
+    assert info.diskSize() > 0 and info.memSize() == 0
+
+    inputs = []
+    apply_diff = SYNC.apply_diff
+    monkeypatch.setattr(
+        SYNC, "apply_diff", lambda df, *a, **kw: (inputs.append(df), apply_diff(df, *a, **kw))
+    )
+    with job_group(spark, "sync_apply_after_report") as jg:
+        apply_syncs([s], lambda: sqlite3.connect(db), columns, quote='"')
+    [df] = inputs
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    for node in ("FileScan", "Exchange", "Join"):
+        assert node not in plan, plan
+    assert jg.stats["file_scans"] == 0 and jg.stats["shuffle_write"] == 0
+    assert_converged(catalog, db, ["customer"])
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_db_sync_apply_converges_sqlite_with_one_scan_per_side(
+    spark, catalog, sf_dir, tmp_path, capsys
+):
+    """``db-sync --apply``: the count by kind runs the join, the apply
+    reads its pinned output, so the source parquet and the snapshot of
+    the live table are each scanned once."""
+    import sys
+
+    from paradump_spark.cli import main
+
+    _, db, columns, report = perturbed_destination(spark, catalog, tmp_path, ["customer"])
+    (tmp_path / "sqlite_cli.py").write_text(
+        f"import sqlite3\n\n\ndef conn():\n    return sqlite3.connect({db!r})\n"
+    )
+    argv = [
+        "db-sync", "--reader", "sqlite_cli:conn", "--writer", "sqlite_cli:conn",
+        "--table", "customer", "--source-parquet", f"{sf_dir}/customer.parquet",
+        "--columns", ",".join(columns["customer"]), "--pk", "c_custkey",
+        "--scratch", str(tmp_path),
+    ]
+    sys.path.insert(0, str(tmp_path))
+    try:
+        with job_group(spark, "db_sync_apply") as jg:
+            assert main(argv + ["--apply"]) == 0
+        out = capsys.readouterr().out
+        want = report["customer"]
+        for kind, action in (("I", "Insert"), ("U", "Update"), ("D", "Delete")):
+            assert f"{kind}={want[action]}" in out
+        assert f"applied {want['Insert'] + want['Update'] + want['Delete']} changes" in out
+        assert jg.stats["file_scans"] == 2  # source + snapshot, once each
+        assert_converged(catalog, db, ["customer"])
+        assert main(argv) == 0
+        assert "customer converged" in capsys.readouterr().out
+    finally:
+        sys.path.remove(str(tmp_path))
 
 
 def test_sync_skips_tables_without_pk(catalog):

@@ -17,6 +17,7 @@ from paradump_spark.sinks import files as FILES
 from paradump_spark.sinks.files import (
     SQL_FILE_HEADER,
     _commit_text,
+    rename_dump_files,
     rendered_tuples,
     write_sql_inserts,
 )
@@ -112,13 +113,40 @@ def test_framing_matches_joiner_header_zstd_partitions_and_empty(three_files, tm
     assert files and all(f.endswith(".zst") for f in files)
     assert len(assert_same_as_oracle(three_files, tmp_path, "rep2", insertsize=7,
                                      partitions=2)) == 2
-    # the 50-99 file holds no row that passes: its partition is empty
-    sparse = three_files.filter((F.col("c_custkey") <= 20) | (F.col("c_custkey") > 120))
-    files = assert_same_as_oracle(sparse, tmp_path, "sparse", insertsize=7)
-    assert sum(1 for b in files.values() if b) == 2
     empty = three_files.filter(F.col("c_custkey") < 0)
     assert_same_as_oracle(empty, tmp_path, "empty", insertsize=7)
     assert write_sql_inserts(empty, "customer", str(tmp_path / "empty2")) == 0
+
+
+def test_empty_partition_leaves_no_headerless_file(three_files, tmp_path):
+    """The 50-99 file holds no row that passes, and it is partition 0:
+    Spark's writer makes part-00000 for it anyway (the joiner left that
+    file there, empty and headerless).  Only the two partitions with rows
+    leave files, so every renamed dump file starts with the header."""
+    sparse = three_files.filter((F.col("c_custkey") <= 20) | (F.col("c_custkey") > 120))
+    assert sparse.where(F.spark_partition_id() == 0).count() == 0
+    new, old = str(tmp_path / "sparse_new"), str(tmp_path / "sparse_old")
+    assert write_sql_inserts(sparse, "customer", new, insertsize=7) == 50
+    oracle_write(sparse, "customer", old, insertsize=7)
+    files = part_files(new)
+    assert sorted(files) == ["part-00001-c000.txt", "part-00002-c000.txt"]
+    assert files == {f: b for f, b in part_files(old).items() if b}
+    names = rename_dump_files(new, "dump_%d_%t_%p%m", "db", "customer", "sql")
+    assert names == ["dump_db_customer_0.sql", "dump_db_customer_1.sql"]
+    for n in names:
+        assert open(os.path.join(new, n)).read().startswith(SQL_FILE_HEADER + "\n")
+
+
+def test_append_drops_only_its_own_empty_part_file(three_files, tmp_path):
+    """An append keeps the files earlier writes left in the directory."""
+    out = str(tmp_path / "append")
+    sparse = three_files.filter(F.col("c_custkey") > 120)
+    write_sql_inserts(three_files, "customer", out, insertsize=7)
+    first = part_files(out)
+    write_sql_inserts(sparse, "customer", out, insertsize=7, mode="append")
+    names = [f for f in os.listdir(out) if f.startswith("part-")]
+    assert len(names) == len(first) + 1
+    assert sum(f.startswith("part-00000") for f in names) == 1
 
 
 def _framing_record(caplog):

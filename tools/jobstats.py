@@ -9,8 +9,10 @@ maintained by AppStatusListener for every application, so reading it
 adds zero overhead to the timed region.
 
 Used by tools/r12_media_probe.py (per-query job counts and shuffle
-bytes for the media dedup steps) and for ad-hoc step profiling; no
-pytest or bench.py row reads it.
+bytes for the media dedup steps), by the tests that pin job and scan
+counts (tests/test_job_budget.py, tests/test_dump_sync.py,
+tests/test_sql_framing.py) and for ad-hoc step profiling; no bench.py
+row reads it.
 """
 
 from __future__ import annotations
@@ -20,11 +22,14 @@ def job_group_stats(spark, group: str) -> dict:
     """Job count + shuffle bytes for every job submitted under
     ``group`` (``sc.setJobGroup``/``setLocalProperty('spark.jobGroup.id')``).
 
-    Returns ``{"jobs": int, "shuffle_write": int, "shuffle_read": int}``.
-    Shuffle bytes are summed over the DISTINCT stages of those jobs
-    (a stage shared by two jobs — skipped/reused exchanges — counts
-    once).  The AppStatusListener fills the store asynchronously, so the
-    listener bus is drained first (up to 10 s) — a job that just
+    Returns ``{"jobs": int, "shuffle_write": int, "shuffle_read": int,
+    "file_scans": int}``.  Shuffle bytes are summed over the DISTINCT
+    stages of those jobs (a stage shared by two jobs — skipped/reused
+    exchanges — counts once).  ``file_scans`` counts the stages that ran
+    (not skipped) and read files: a ``FileScanRDD`` in their RDD graph.
+    Reads of pinned blocks are not file scans.  The AppStatusListener
+    fills the store asynchronously, so the listener bus is drained first
+    (up to 10 s) — a job that just
     finished is otherwise missed or half-counted.  Never raises: on any
     py4j/store surprise it returns -1 markers so a caller's run is never
     sunk by its observability.
@@ -43,7 +48,7 @@ def job_group_stats(spark, group: str) -> dict:
                 sids = j.stageIds()
                 for k in range(sids.size()):
                     stage_ids.add(sids.apply(k))
-        sread = swrite = 0
+        sread = swrite = scans = 0
         for sid in stage_ids:
             try:
                 s = store.lastStageAttempt(int(sid))
@@ -51,10 +56,25 @@ def job_group_stats(spark, group: str) -> dict:
                 continue
             swrite += s.shuffleWriteBytes()
             sread += s.shuffleReadBytes()
+            if s.status().toString() == "COMPLETE" and "FileScanRDD" in _rdd_names(
+                store.operationGraphForStage(int(sid)).rootCluster()
+            ):
+                scans += 1
         return {"jobs": n_jobs, "shuffle_write": int(swrite),
-                "shuffle_read": int(sread)}
+                "shuffle_read": int(sread), "file_scans": scans}
     except Exception:  # noqa: BLE001 — observability must never sink a run
-        return {"jobs": -1, "shuffle_write": -1, "shuffle_read": -1}
+        return {"jobs": -1, "shuffle_write": -1, "shuffle_read": -1,
+                "file_scans": -1}
+
+
+def _rdd_names(cluster) -> list[str]:
+    """Names of the RDDs in a stage's operation-graph cluster, nested
+    clusters included."""
+    nodes, clusters = cluster.childNodes(), cluster.childClusters()
+    names = [nodes.apply(i).name() for i in range(nodes.size())]
+    for i in range(clusters.size()):
+        names += _rdd_names(clusters.apply(i))
+    return names
 
 
 class job_group:
