@@ -9,7 +9,7 @@ here so split planning and diff have PK metadata without a live DB.
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -42,6 +42,8 @@ class ParquetCatalog:
     spark: SparkSession
     root: str
     db_name: str = "testdata"
+    # table -> (file listing, inferred schema)
+    _schemas: dict = field(default_factory=dict, init=False, repr=False, compare=False)
 
     def list_tables(self, excludes: list[str] | None = None) -> list[str]:
         names = sorted(
@@ -61,7 +63,18 @@ class ParquetCatalog:
         return os.path.join(self.root, f"{table}.parquet")
 
     def load(self, table: str) -> DataFrame:
-        return self.spark.read.parquet(self.path(table))
+        """The table's DataFrame; the schema is inferred (one Spark job)
+        only when the table's files (names, sizes, mtimes) changed since
+        the last inference."""
+        path = self.path(table)
+        listing = _listing(path)
+        memo = self._schemas.get(table)
+        if listing is not None and memo is not None and memo[0] == listing:
+            return self.spark.read.schema(memo[1]).parquet(path)
+        df = self.spark.read.parquet(path)
+        if listing is not None:
+            self._schemas[table] = (listing, df.schema)
+        return df
 
     def meta(self, table: str, df: DataFrame | None = None) -> TableMeta:
         """Introspect (S2 analogue): schema from parquet footer, size from fs.
@@ -85,6 +98,22 @@ class ParquetCatalog:
         names = self.list_tables(excludes)
         names.sort(key=lambda n: _path_size(self.path(n)), reverse=True)
         return {n: self.load(n) for n in names}
+
+
+def _listing(p: str) -> list[tuple[str, int, int]] | None:
+    """(relative name, size, mtime_ns) of every file under ``p``; None
+    when ``p`` is not on the local file system."""
+    if not os.path.exists(p):
+        return None
+    if not os.path.isdir(p):
+        st = os.stat(p)
+        return [("", st.st_size, st.st_mtime_ns)]
+    out = []
+    for d, _, fs in os.walk(p):
+        for f in fs:
+            st = os.stat(os.path.join(d, f))
+            out.append((os.path.relpath(os.path.join(d, f), p), st.st_size, st.st_mtime_ns))
+    return sorted(out)
 
 
 def _path_size(p: str, suffix: str | None = None) -> int:

@@ -10,7 +10,9 @@ per table; Spark's scheduler replaces the channel plumbing.  Like the
 reference's single comparator walk feeding both the stats monitor and the
 DML generators, each join runs once: its classified output is pinned to
 disk, the report's first action writes it, and the DML apply reads it
-back without scanning or shuffling either side again.
+back without scanning or shuffling either side again.  A report with no
+apply reads each join once, so :func:`classify_tables` leaves the frames
+unpinned and pays no pin write.
 """
 
 from __future__ import annotations
@@ -41,26 +43,18 @@ class SyncOptions:
 @dataclass
 class TableSync:
     table: str
-    classified: DataFrame  # pk…, dmltype, payload…; disk-pinned
+    classified: DataFrame  # pk…, dmltype, payload…; disk-pinned by sync_tables
     stats: DataFrame  # (table, phase, action, cnt)
 
 
-def sync_tables(
+def _classify(
     src: ParquetCatalog,
     dst: ParquetCatalog,
-    tables: list[str] | None = None,
-    primary_keys: dict[str, list[str]] | None = None,
-    options: SyncOptions | None = None,
-) -> list[TableSync]:
-    """Diff every table present in both catalogs; returns per-table
-    classified frames + stats.
-
-    Each classified frame is pinned to local disk (``operators.diff._disk_pin``).
-    Under AQE the pin runs each join's shuffle map stages here, at call
-    time (both sides are scanned once); the first action on the frame or
-    its stats — usually ``sync_report(...).collect()`` — runs the join and
-    writes the blocks, and every later one (:func:`apply_syncs`) reads
-    them.  The blocks are freed with the returned frames."""
+    tables: list[str] | None,
+    primary_keys: dict[str, list[str]] | None,
+    options: SyncOptions | None,
+) -> list[tuple[str, DataFrame]]:
+    """(table, classified frame) for every table present in both catalogs."""
     options = options or SyncOptions()
     pks = primary_keys or TESTDATA_PRIMARY_KEYS
     names = tables or [
@@ -70,7 +64,7 @@ def sync_tables(
         # excludes apply to explicit lists too — a flag the user passed
         # must never be a silent no-op
         names = [n for n in names if not any(x in n for x in options.excludes)]
-    out: list[TableSync] = []
+    out: list[tuple[str, DataFrame]] = []
     for name in names:
         pk = pks.get(name)
         if not pk:
@@ -89,8 +83,46 @@ def sync_tables(
             classified = diff_classified(
                 src.load(name), dst.load(name), pk, keep_noops=options.keep_noops_in_stats
             )
-        classified = _disk_pin(classified)
-        out.append(TableSync(name, classified, diff_stats(classified, name)))
+        out.append((name, classified))
+    return out
+
+
+def classify_tables(
+    src: ParquetCatalog,
+    dst: ParquetCatalog,
+    tables: list[str] | None = None,
+    primary_keys: dict[str, list[str]] | None = None,
+    options: SyncOptions | None = None,
+) -> list[TableSync]:
+    """Diff every table present in both catalogs; returns per-table
+    classified frames + stats, unpinned: every action on a frame or its
+    stats runs the table's join.  For a caller that reads each table
+    once, such as a report with no apply; :func:`sync_tables` pins."""
+    return [
+        TableSync(name, c, diff_stats(c, name))
+        for name, c in _classify(src, dst, tables, primary_keys, options)
+    ]
+
+
+def sync_tables(
+    src: ParquetCatalog,
+    dst: ParquetCatalog,
+    tables: list[str] | None = None,
+    primary_keys: dict[str, list[str]] | None = None,
+    options: SyncOptions | None = None,
+) -> list[TableSync]:
+    """:func:`classify_tables` with each classified frame pinned to local
+    disk (``operators.diff._disk_pin``), for a report and an apply.
+
+    Under AQE the pin runs each join's shuffle map stages here, at call
+    time (both sides are scanned once); the first action on the frame or
+    its stats — usually ``sync_report(...).collect()`` — runs the join and
+    writes the blocks, and every later one (:func:`apply_syncs`) reads
+    them.  The blocks are freed with the returned frames."""
+    out: list[TableSync] = []
+    for name, c in _classify(src, dst, tables, primary_keys, options):
+        pinned = _disk_pin(c)
+        out.append(TableSync(name, pinned, diff_stats(pinned, name)))
     return out
 
 

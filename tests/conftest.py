@@ -12,8 +12,12 @@ SF_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
+    import os
     import tempfile
 
+    # a class data sharing cache of the run's own: the suite neither maps
+    # nor fills an archive in the user's cache
+    os.environ["XDG_CACHE_HOME"] = tempfile.mkdtemp(prefix="paradump_cache_")
     s = build_session(
         app_name="paradump_spark_tests",
         master="local[4]",

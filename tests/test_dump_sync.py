@@ -93,6 +93,7 @@ def test_dump_sql_mode(catalog, tmp_path):
 def test_dump_sql_rows_come_from_the_framing_counts(catalog, spark, tmp_path):
     """sql mode fills DumpResult.rows from write_sql_inserts' partition
     counts: count_rows=True runs no extra job."""
+    catalog.load("nation")  # both calls then reuse the inferred schema
     jobs = {}
     for count_rows in (False, True):
         with job_group(spark, f"dump_rows_{count_rows}") as jg:

@@ -89,9 +89,14 @@ def test_daemon_decision(monkeypatch, caplog, master, importable, extra, expecte
     assert len(probed) == (1 if local and not extra else 0)
     (record,) = [r for r in caplog.records if r.name == "paradump_spark"]
     chosen = extra.get("spark.python.daemon.module", expected or "pyspark.daemon")
-    assert record.args["daemon"] == chosen
+    assert record.args["chosen"] == chosen
     assert record.args["master"] == master
-    assert {"python", "cwd", "pythonpath", "reason"} <= set(record.args)
+    assert {"PYSPARK_PYTHON", "cwd", "PYTHONPATH", "reason"} <= set(record.args)
+    assert record.getMessage() == (
+        f"python worker daemon {chosen}: {record.args['reason']} (master={master}, "
+        f"PYSPARK_PYTHON={record.args['PYSPARK_PYTHON']}, cwd={record.args['cwd']}, "
+        f"PYTHONPATH={record.args['PYTHONPATH']})"
+    )
 
 
 def test_worker_import_probe(tmp_path):
