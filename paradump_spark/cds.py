@@ -27,6 +27,10 @@ log = logging.getLogger("paradump_spark")
 DUMP_TIMEOUT_S = 300
 #: seconds the driver JVM gets to exit once its gateway is shut down
 JVM_EXIT_TIMEOUT_S = 30
+#: days another key's archive may go unused (no session mapped it, see
+#: :func:`plan`) before an archive build in the same cache removes it,
+#: its class list and its build log; an archive is 160-220 MB
+STALE_DAYS = 30
 
 
 @dataclass
@@ -142,6 +146,10 @@ def plan(master: str, conf: dict[str, str]) -> Plan:
     key = os.path.join(cache, _archive_key(_java_home(), entries))
     if os.path.exists(f"{key}.jsa"):
         inputs["flag"] = f"-XX:SharedArchiveFile={key}.jsa"
+        try:
+            os.utime(f"{key}.jsa")  # in use: no other key's build removes it
+        except OSError:
+            pass
         return Plan("use", "archive matches", inputs, conf_dir=empty, key=key)
     if os.path.exists(f"{key}.log"):
         return Plan("off", f"archive build failed, see {key}.log", inputs)
@@ -226,6 +234,7 @@ def _finish(key: str, classlist: str, cmd: list[str] | None) -> None:
                 os.replace(tmp, f"{key}.jsa")
                 log.info("class data sharing archive %s.jsa built in %.1f s",
                          key, time.monotonic() - t0)
+                _remove_stale(key)
             else:
                 with open(f"{key}.log", "wb") as fh:
                     fh.write(output)
@@ -235,3 +244,21 @@ def _finish(key: str, classlist: str, cmd: list[str] | None) -> None:
         for path in (classlist, tmp):
             if os.path.exists(path):
                 os.remove(path)
+
+
+def _remove_stale(key: str) -> None:
+    """Remove the archive, class list and build log of every other key
+    in ``key``'s cache that has not been touched for ``STALE_DAYS``."""
+    cache, own = os.path.split(key)
+    cutoff = time.time() - STALE_DAYS * 86400
+    for name in os.listdir(cache):
+        if name.startswith(own) or not name.endswith((".jsa", ".classlist", ".log")):
+            continue
+        path = os.path.join(cache, name)
+        try:
+            if os.stat(path).st_mtime < cutoff:
+                os.remove(path)
+                log.info("class data sharing: removed %s, unused for %d days",
+                         path, STALE_DAYS)
+        except OSError:
+            pass  # another process removed or replaced it

@@ -839,13 +839,16 @@ def main(argv: list[str] | None = None) -> int:
             """Accept both layouts: a source catalog (<table>.parquet) and
             a dump/restore directory (<table>/ written by dump_tables)."""
 
+            def __init__(self, spark):
+                self.spark = spark
+
             def load(self, table):
                 p = os.path.join(args.directory, f"{table}.parquet")
                 if not os.path.exists(p):
                     p = os.path.join(args.directory, table)
-                return spark.read.parquet(p)
+                return self.spark.read.parquet(p)
 
-        checks = verify_dump(_RestoredCatalog(), args.manifest)
+        checks = verify_dump(_RestoredCatalog(spark), args.manifest)
         for table, ok in sorted(checks.items()):
             print(f"verify {table}: {'OK' if ok else 'MISMATCH'}")
         return 0 if all(checks.values()) else 1

@@ -4,20 +4,50 @@
 Mode map (ref ``-dumpmode``, :3493): ``sql`` → K1 insert files, ``csv`` →
 K2 native CSV, ``csv_exact`` → K2 with the reference's exact cell rules,
 ``parquet`` → lake-native, ``nul`` → K4 noop (benchmark mode).
+Exclusion filters are the P5 substring semantics.  Each table write is a
+distributed ``df.write`` — the browser/reader/generator/writer goroutine
+pipeline collapses into one Spark job per table (two in ``sql`` mode: a
+per-partition count, then the framed write).
 
-Scheduling: largest table first (O4, :1414) so the long pole starts
-immediately; Spark pipelines the rest.  Exclusion filters are the P5
-substring semantics.  Each table write is a distributed ``df.write`` —
-the browser/reader/generator/writer goroutine pipeline collapses into
-one Spark job per table.
+Scheduling: largest table first (O4, :1414), and a few tables in flight.
+A table's pipeline is load → meta → the mode's writer (driver-side plan
+building, its jobs, the zstd finalize) → the optional row count.  Run one
+after another, the executors idle through every driver-side step between
+jobs.  So :func:`dump_tables` hands each table's pipeline to a driver
+thread pool ``_TABLES_IN_FLIGHT`` wide (fewer when there are fewer
+tables), submitted largest first: Spark's FIFO scheduler gives the
+largest table's jobs the first slots, and the next tables' jobs fill the
+gaps and the tails.  The width is a constant, not a function of the
+cluster: each pipeline is one driver thread, and Spark spreads each job
+over every executor anyway.  A warm ``local[3]`` session (2 g heap,
+1 MB splits, 4-vCPU VM) dumped the 10 testdata tables (``sql`` + zstd,
+median of 4) in 5.04 / 2.79 / 2.46 / 2.85 s at sf0.1 and 2.46 / 1.48 /
+1.18 / 1.18 s at sf0.01 with 1 / 2 / 3 / 4 tables in flight: 3 takes
+nearly all of the gain and is the fastest on the larger tables.  The
+pool threads inherit the caller's local properties (job group,
+description) and job tags, so every job of the call is found under the
+caller's group.  The one-task per-partition count jobs of ``sql`` mode
+still run one at a time (``sinks.files._COUNT_LOCK``): overlapping, their
+hash-aggregation pages only grew the heap.  :func:`write_manifest` and
+:func:`verify_dump` run their per-table checksum jobs through the same
+pool.
+
+Error rule: once a table fails, no queued table starts; the tables in
+flight finish, then the first failure in scheduling order is raised.
+No pool thread outlives the call.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+from concurrent.futures import FIRST_EXCEPTION, CancelledError, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 
+from pyspark.util import inheritable_thread_target
+
 from paradump_spark.catalog import ParquetCatalog, _path_size
+from paradump_spark.session import _decision
 from paradump_spark.sinks.files import (
     write_csv,
     write_jsonl,
@@ -28,6 +58,9 @@ from paradump_spark.sinks.files import (
 )
 
 DUMP_MODES = ("sql", "csv", "csv_exact", "jsonl", "parquet", "orc", "nul")
+
+#: table pipelines run at once (see the module docstring for the sweep)
+_TABLES_IN_FLIGHT = 3
 
 
 @dataclass
@@ -50,6 +83,41 @@ class DumpOptions:
     count_rows: bool = False
 
 
+def _in_flight(spark, fn, items: list) -> list:
+    """``[fn(item) for item in items]``, up to ``_TABLES_IN_FLIGHT`` at
+    once, started in list order, under the error rule of the module
+    docstring.  The calls see the caller's local properties and job tags."""
+    if not items:
+        return []
+    wrap = inheritable_thread_target(spark)
+    # without pinned threads (PYSPARK_PIN_THREAD=false) pyspark hands the
+    # session back: there is no JVM thread state to carry over
+    target = fn if wrap is spark else wrap(fn)
+    failed = threading.Event()
+
+    def run(item):
+        if failed.is_set():
+            raise CancelledError(f"not started: an earlier table failed ({item})")
+        try:
+            return target(item)
+        except BaseException:
+            failed.set()
+            raise
+
+    pool = ThreadPoolExecutor(
+        min(len(items), _TABLES_IN_FLIGHT), thread_name_prefix="paradump-table"
+    )
+    try:
+        futures = [pool.submit(run, item) for item in items]
+        wait(futures, return_when=FIRST_EXCEPTION)
+    finally:
+        failed.set()  # an interrupted caller starts nothing more either
+        pool.shutdown(wait=True, cancel_futures=True)
+    # queued calls sit behind every started one, so the first exception
+    # met in list order is the first failure
+    return [f.result() for f in futures]
+
+
 def dump_tables(
     catalog: ParquetCatalog,
     out_dir: str,
@@ -70,8 +138,8 @@ def dump_tables(
         names = [n for n in names if not any(x in n for x in options.excludes)]
     # O4: largest first (_path_size walks directory-backed tables too)
     names = sorted(names, key=lambda n: _path_size(catalog.path(n)), reverse=True)
-    results: list[DumpResult] = []
-    for name in names:
+
+    def dump_one(name: str) -> DumpResult:
         df = catalog.load(name)
         meta = catalog.meta(name, df)
         path: str | None = os.path.join(out_dir, name)
@@ -113,8 +181,24 @@ def dump_tables(
             path = None
         if rows is None and options.count_rows:
             rows = df.count()
-        results.append(DumpResult(name, options.mode, path, rows))
-    return results
+        return DumpResult(name, options.mode, path, rows)
+
+    width = min(len(names), _TABLES_IN_FLIGHT)
+    _decision(
+        "dump tables in flight", "concurrent" if width > 1 else "serial",
+        f"largest first, at most {_TABLES_IN_FLIGHT} table pipelines at once",
+        tables=len(names), width=width,
+    )
+    return _in_flight(catalog.spark, dump_one, names)
+
+
+def _checksums(catalog: ParquetCatalog, tables: list[str]) -> list:
+    """``table_checksum`` row of each table, the tables in flight."""
+    from paradump_spark.operators.checksum import table_checksum
+
+    return _in_flight(
+        catalog.spark, lambda t: table_checksum(catalog.load(t)).collect()[0], tables
+    )
 
 
 def write_manifest(
@@ -132,19 +216,17 @@ def write_manifest(
     skip it when the dump itself is the verification (noop mode).
     """
     import json
-    import os
 
-    from paradump_spark.operators.checksum import table_checksum
-
-    entries = {}
-    for r in results:
-        row = table_checksum(catalog.load(r.table)).collect()[0]
-        entries[r.table] = {
+    rows = _checksums(catalog, [r.table for r in results])
+    entries = {
+        r.table: {
             "mode": r.mode,
             "path": r.path,
             "n_rows": int(row["n_rows"]),
             "hash_sum": str(row["hash_sum"]),
         }
+        for r, row in zip(results, rows)
+    }
     manifest_path = os.path.join(out_dir, "_manifest.json")
     with open(manifest_path, "w") as fh:
         json.dump(entries, fh, indent=2, sort_keys=True)
@@ -156,15 +238,11 @@ def verify_dump(catalog: ParquetCatalog, manifest_path: str) -> dict[str, bool]:
     tables visible in ``catalog`` (e.g. a restored copy); True = match."""
     import json
 
-    from paradump_spark.operators.checksum import table_checksum
-
     with open(manifest_path) as fh:
         entries = json.load(fh)
-    out = {}
-    for table, meta in entries.items():
-        row = table_checksum(catalog.load(table)).collect()[0]
-        out[table] = (
-            int(row["n_rows"]) == meta["n_rows"]
-            and str(row["hash_sum"]) == meta["hash_sum"]
-        )
-    return out
+    rows = _checksums(catalog, list(entries))
+    return {
+        table: int(row["n_rows"]) == meta["n_rows"]
+        and str(row["hash_sum"]) == meta["hash_sum"]
+        for (table, meta), row in zip(entries.items(), rows)
+    }

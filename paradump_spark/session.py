@@ -44,7 +44,10 @@ states, logged once on the ``paradump_spark`` logger
 * ``use``: the key's archive exists; ``-XX:SharedArchiveFile`` is added
   to ``spark.driver.extraJavaOptions`` after any value already there.
   The JVM's default ``-Xshare:auto`` maps a stale or truncated archive
-  not at all, silently, so it costs speed, never correctness.
+  not at all, silently, so it costs speed, never correctness.  Each
+  ``use`` touches the archive; an archive build removes the files of
+  other keys untouched for ``cds.STALE_DAYS`` (30), so the archives of
+  a replaced JDK or Spark do not stay in the cache for good.
 * ``record``: no archive yet; ``-XX:DumpLoadedClassList`` records the
   classes the session loads, and at interpreter exit, after the driver
   JVM has ended (bounded wait), the list is kept as

@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import logging
 import re
+import threading
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -47,6 +48,15 @@ SQL_FILE_HEADER = "SET NAMES utf8mb4;\nSET TIME_ZONE='+00:00';"
 #: ``monotonically_increasing_id()`` holds a row's position within its
 #: partition in the low 33 bits and the partition index above them.
 _POS_BITS = 33
+
+#: one :func:`_partition_counts` job at a time in this process.  Its one
+#: task runs two hash aggregates, each taking a Tungsten page (32 MB on a
+#: 2 g ``local[3]`` driver) that G1 allocates as humongous regions.  With
+#: tables dumped in flight, overlapping counts doubled that and made G1
+#: grow the heap (perfbench dump peak RSS +11% on a 4-vCPU VM) for no
+#: speed: a count is one short task, and the other tables' writes fill
+#: the idle slots.
+_COUNT_LOCK = threading.Lock()
 
 
 def rendered_tuples(
@@ -212,14 +222,16 @@ def _partition_counts(df: DataFrame) -> list[int]:
 
     One column-free job: ``coalesce(1)`` gives it one stage and one task
     and no shuffle, so that task reads every split's row-group metadata
-    (a file scan) serially — footers only, no column data."""
-    rows = (
+    (a file scan) serially — footers only, no column data.  Such jobs run
+    one at a time (``_COUNT_LOCK``)."""
+    counted = (
         df.select(F.spark_partition_id().alias("p"))
         .coalesce(1)
         .groupBy("p")
         .count()
-        .collect()
     )
+    with _COUNT_LOCK:
+        rows = counted.collect()
     counts = [0] * (max((r["p"] for r in rows), default=-1) + 1)
     for r in rows:
         counts[r["p"]] = r["count"]

@@ -6,6 +6,7 @@ import logging
 import os
 import subprocess
 import sys
+import time
 
 import pytest
 from pyspark.sql import SparkSession
@@ -93,6 +94,42 @@ def test_second_run_builds_the_archive(fake_install, monkeypatch, caplog):
         "conf", os.path.basename(f"{first.key}.jsa"), os.path.basename(f"{first.key}.lock")}
     assert "built in" in caplog.records[-1].getMessage()
     assert cds.plan("local[2]", {}).state == "use"
+
+
+def _age(path, days):
+    """Set ``path``'s times ``days`` days back."""
+    t = os.stat(path).st_mtime - days * 86400
+    os.utime(path, (t, t))
+
+
+def test_use_touches_its_archive(fake_install):
+    p = cds.plan("local[2]", {})
+    open(f"{p.key}.jsa", "wb").close()
+    _age(f"{p.key}.jsa", cds.STALE_DAYS + 10)
+    assert cds.plan("local[2]", {}).state == "use"
+    assert time.time() - os.stat(f"{p.key}.jsa").st_mtime < 60
+
+
+def test_build_removes_other_keys_stale_files(fake_install, monkeypatch):
+    """A build removes another environment's archive, class list and
+    build log once unused for STALE_DAYS; one that a session mapped
+    recently, and this key's own files, stay."""
+    _exit_hook(cds.plan("local[2]", {}), monkeypatch)
+    second = cds.plan("local[2]", {})
+    stale = {_cache(f"{'a' * 20}{ext}") for ext in (".jsa", ".classlist", ".log")}
+    recent = _cache(f"{'b' * 20}.jsa")  # another environment, still in use
+    for path in [*stale, recent]:
+        open(path, "wb").close()
+        _age(path, cds.STALE_DAYS + 1)
+    # its session maps it, as a session of that environment would
+    with monkeypatch.context() as m:
+        m.setattr(cds, "_archive_key", lambda java_home, entries: "b" * 20)
+        assert cds.plan("local[2]", {}).state == "use"
+    write = "import sys; open(sys.argv[-1].split('=', 1)[1], 'w').write('jsa')"
+    _exit_hook(second, monkeypatch, write)
+    left = set(os.listdir(cds.cache_dir()))
+    assert not {os.path.basename(p) for p in stale} & left
+    assert {os.path.basename(recent), os.path.basename(f"{second.key}.jsa")} <= left
 
 
 def test_failed_build_leaves_its_output_and_turns_off(fake_install, monkeypatch):
