@@ -127,10 +127,6 @@ def _path_size(p: str, suffix: str | None = None) -> int:
     return os.path.getsize(p) if os.path.exists(p) else 0
 
 
-def load_testdata(spark: SparkSession, sf_dir: str) -> ParquetCatalog:
-    return ParquetCatalog(spark, sf_dir)
-
-
 def _parquet_ts_arrow_type(path: str, col: str = "ts"):
     """The footer-declared arrow type of ``col`` (file or directory of
     part files; None when the column is absent)."""

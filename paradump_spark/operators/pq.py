@@ -18,25 +18,30 @@ re-scored exactly — the faiss IVF-PQ recipe, re-expressed Spark-first:
   broadcast as flat float arrays and the score is a codegen'd
   ``aggregate`` over the code positions — no UDF on the corpus-sized
   side and no shuffle in the scoring join itself (the LUTs broadcast);
-* candidate selection is the skew-safe two-stage cut
-  (`plans.topk.partial_topk`): the scored rows shuffle ONCE on
+* candidate selection is the skew-safe two-stage rank
+  (`plans.topk.top_n`): the scored rows shuffle ONCE on
   ``(input partition, query)`` — keys that spread every query over all
   partitions — and the global per-query ranking then touches only
   ``rescore × partitions`` rows per query, never the full scored
   product through one task;
 * exact re-scoring touches only ``rescore`` candidate rows per query.
+
+The cell probe, the final rank and the stored index layout are
+`operators.similarity`'s (see its module docstring); this module adds
+the codes, the LUTs and the ADC score.
 """
 
 # NB: no `from __future__ import annotations` here — the pandas-UDF type
 # hints must stay live objects for PySpark's eval-type inference.
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from paradump_spark.functions import vectors as V
-from paradump_spark.plans.topk import partial_topk
+from paradump_spark.operators import similarity as SIM
+from paradump_spark.plans.topk import top_n
 
 
 @dataclass
@@ -209,9 +214,8 @@ def train_pq_residual(
 
     X = _train_sample(corpus, id_col, vec_col, train_cap, seed)
     cents = sorted(centroids.collect(), key=lambda r: r["cell_id"])
-    C = np.array([r["centroid"] for r in cents], dtype=np.float64)
-    Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-30)
-    assign = np.argmax(X @ Cn.T, axis=1)  # argmax ties -> lowest cell id
+    Cn = SIM._unit(np.array([r["centroid"] for r in cents], dtype=np.float64))
+    assign = SIM.top_p(X, Cn, 1)[0][:, 0]  # ties -> lowest cell id
     resid = X - Cn[assign]
     books, rot = _learn_opq(resid, m, ksub, iters, opq_iters)
     return PQCodebooks(books, rot)
@@ -269,7 +273,10 @@ def query_luts(queries, qid_col, vec_col, books: PQCodebooks):
     so a million-query batch never materializes on the driver.  The
     CALLER decides whether the result is small enough to broadcast into
     the scoring join (`max_broadcast_queries` gates in
-    :func:`pq_adc_topk` / :func:`ivf_pq_search`).
+    :func:`pq_adc_topk` / :func:`ivf_pq_query_index`).
+
+    A query whose vector is NULL or not ``m·dsub`` wide gets no row, so
+    its search finds no rows instead of failing the job.
     """
     import pandas as pd
 
@@ -283,22 +290,43 @@ def query_luts(queries, qid_col, vec_col, books: PQCodebooks):
     def lut(vs: pd.Series) -> pd.Series:
         import numpy as np
 
-        if len(vs) == 0:
-            return pd.Series([], dtype=object)
-        X = np.array(vs.tolist(), dtype=np.float64)
-        norms = np.linalg.norm(X, axis=1, keepdims=True)
-        X = X / np.where(norms == 0.0, 1.0, norms)
+        ok, X = SIM._stack(vs, m * dsub)
+        X = SIM._unit(X)
         if R is not None:
             # (q·R)·(x·R) = q·x for orthogonal R — rotate the query once
             X = X @ R
-        out = np.concatenate(
-            [X[:, s * dsub : (s + 1) * dsub] @ C[s].T for s in range(m)],
-            axis=1,
-        )
-        return pd.Series(list(out))
+        out = [None] * len(vs)
+        for i, row in zip(
+            np.flatnonzero(ok),
+            np.concatenate(
+                [X[:, s * dsub : (s + 1) * dsub] @ C[s].T for s in range(m)],
+                axis=1,
+            ),
+        ):
+            out[i] = row
+        return pd.Series(out, dtype=object)
 
+    # nondeterministic only so the NULL filter is not pushed below the
+    # projection as a second evaluation of the UDF (see
+    # `similarity._top_p_map`); the values are deterministic
     return queries.select(
-        F.col(qid_col).alias("query_id"), lut(F.col(vec_col)).alias("__lut")
+        F.col(qid_col).alias("query_id"),
+        lut.asNondeterministic()(F.col(vec_col)).alias("__lut"),
+    ).where(F.col("__lut").isNotNull())
+
+
+def _adc_score(books: PQCodebooks, code_col: str):
+    """Each scored row's ADC score: a fold over the ``m`` code
+    positions, reading the ``__lut`` slot of each code —
+    aggregate+element_at are codegen'd JVM expressions."""
+    return F.aggregate(
+        F.sequence(F.lit(0), F.lit(books.m - 1)),
+        F.lit(0.0),
+        lambda acc, s: acc
+        + F.element_at(
+            F.col("__lut"),
+            s * books.ksub + F.element_at(F.col(code_col), s + 1) + 1,
+        ),
     )
 
 
@@ -338,7 +366,6 @@ def pq_adc_topk(
     `similarity.brute_force_topk` shape, so `ann_recall` composes.
     """
     qid = query_id_col or id_col
-    ksub = books.ksub
     # single materialization of the projected query frame: the broadcast
     # gate's count, the LUTs, and the exact re-score all derive from it —
     # a nondeterministic query source (limit/sample without ordering)
@@ -356,22 +383,10 @@ def pq_adc_topk(
         # rows and the search plan stays pure JVM — the Arrow stage runs
         # once here, never against the corpus side
         luts = F.broadcast(luts.localCheckpoint(eager=True))
-    # ADC score: fold over the m code positions, reading the lut slot of
-    # each code — aggregate+element_at are codegen'd JVM expressions
-    pos = F.sequence(F.lit(0), F.lit(books.m - 1))
-    score = F.aggregate(
-        pos,
-        F.lit(0.0),
-        lambda acc, s: acc
-        + F.element_at(
-            F.col("__lut"),
-            s * ksub + F.element_at(F.col(code_col), s + 1) + 1,
-        ),
-    )
     scored = (
         codes.select(F.col(id_col).alias("neighbor_id"), code_col, vec_col)
         .crossJoin(luts)
-        .withColumn("__adc", score)
+        .withColumn("__adc", _adc_score(books, code_col))
         # project the LUT array (and the spent code) OUT before the
         # candidate-cut windows: each lut row is ksub·m doubles (16 KB
         # at 8×256) and the two ranking exchanges below would otherwise
@@ -381,27 +396,24 @@ def pq_adc_topk(
         # downstream reads __lut or the code.
         .select("query_id", "neighbor_id", vec_col, "__adc")
     )
-    # skew-safe candidate cut: ≤ rescore rows per (input partition, query)
-    # before the global per-query ranking (identical result; the order is
-    # total via the neighbor_id tiebreak)
-    part = partial_topk(
+    return _rescore(scored, qsrc, vec_col, k, rescore, broadcast_q)
+
+
+def _rescore(scored, qsrc, vec_col, k, rescore, broadcast_q) -> DataFrame:
+    """The two PQ search stages after ADC: keep each query's ``rescore``
+    best (query_id, neighbor_id, ``vec_col``, __adc) rows (skew-safe
+    `plans.topk.top_n`; the neighbor_id tiebreak makes the order
+    total), re-score those few exactly on the raw vectors, and return
+    the top ``k`` in the public shape.  The exact rank is one window:
+    its input is already ≤ ``rescore`` rows per query."""
+    cands = top_n(
         scored,
         ["query_id"],
         [F.col("__adc").desc(), F.col("neighbor_id").asc()],
         rescore,
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("__adc").desc(), F.col("neighbor_id").asc()
-    )
-    cands = (
-        part.withColumn("__r", F.row_number().over(wq))
-        .where(F.col("__r") <= rescore)
-        .drop("__r", "__adc")
-    )
-    # exact re-score of rescore×queries rows only
-    q = qsrc.select(
-        "query_id", V.normalized(F.col(vec_col)).alias("__qn")
-    )
+        "__r",
+    ).drop("__r", "__adc")
+    q = qsrc.select("query_id", V.normalized(F.col(vec_col)).alias("__qn"))
     if broadcast_q:
         q = F.broadcast(q)
     exact = cands.join(q, "query_id").select(
@@ -409,14 +421,7 @@ def pq_adc_topk(
         "neighbor_id",
         V.dot(F.col("__qn"), V.normalized(F.col(vec_col))).alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cosine", 6).alias("cosine"))
-    )
+    return SIM._neighbors(exact, k, bounded=True)
 
 
 # --------------------------------------------------------------------------
@@ -492,56 +497,53 @@ def ivf_pq_build_index(
     (see :func:`train_pq_residual`); the residual is a pure JVM
     ``zip_with`` over the broadcast centroid join — same single pass.
     """
-    from paradump_spark.operators import similarity as SIM
-
     cents = SIM.ivf_centroids(corpus, id_col, vec_col, num_cells, seed)
     if refine_iters:
         cents = SIM.kmeans_refine(
             corpus, cents, id_col, vec_col, refine_iters,
             train_cap=train_cap, seed=seed,
         )
-    assigned = SIM.ivf_assign(corpus, cents, id_col, vec_col)
+    train = dict(
+        m=m, ksub=ksub, train_cap=train_cap, seed=seed, opq_iters=opq_iters
+    )
     if residual:
-        books = train_pq_residual(
-            corpus, cents, id_col, vec_col, m=m, ksub=ksub,
-            train_cap=train_cap, seed=seed, opq_iters=opq_iters,
-        )
-        cn = F.broadcast(
-            cents.select(
-                "cell_id", V.normalized(F.col("centroid")).alias("__cn")
-            )
-        )
-        with_resid = assigned.join(cn, "cell_id").withColumn(
-            "__resid",
-            F.zip_with(
-                V.normalized(F.col(vec_col)), F.col("__cn"), lambda a, b: a - b
-            ),
-        )
-        encoded = pq_encode(with_resid, "__resid", books, normalize=False).drop(
-            "__resid", "__cn"
-        )
+        books = train_pq_residual(corpus, cents, id_col, vec_col, **train)
     else:
-        books = train_pq(
-            corpus, id_col, vec_col, m=m, ksub=ksub,
-            train_cap=train_cap, seed=seed, opq_iters=opq_iters,
-        )
-        encoded = pq_encode(assigned, vec_col, books)
-    from pyspark.sql import Observation
-
-    # stored row count rides the write job (see similarity.ivf_build_index)
-    obs = Observation()
-    encoded = encoded.observe(obs, F.count(F.lit(1)).alias("n_rows"))
-    encoded.repartition(F.col("cell_id")).write.mode("overwrite").partitionBy(
-        "cell_id"
-    ).parquet(f"{path}/corpus")
+        books = train_pq(corpus, id_col, vec_col, **train)
+    assigned = SIM.ivf_assign(corpus, cents, id_col, vec_col)
+    n_rows = SIM._write_cells(
+        _encode_cells(assigned, cents, vec_col, books, residual), path
+    )
     cents.write.mode("overwrite").parquet(f"{path}/centroids")
     save_codebooks(corpus.sparkSession, books, f"{path}/pq_codebooks")
-    from paradump_spark.operators.similarity import write_index_meta
-
-    write_index_meta(
-        corpus.sparkSession, path, n_rows=obs.get["n_rows"], residual=residual,
-    )
+    SIM.write_index_meta(corpus.sparkSession, path, n_rows=n_rows, residual=residual)
     return books
+
+
+def _encode_cells(
+    assigned: DataFrame,
+    cents: DataFrame,
+    vec_col: str,
+    books: PQCodebooks,
+    residual: bool,
+    code_col: str = "pq_code",
+) -> DataFrame:
+    """``assigned`` (rows + ``cell_id``) + ``code_col``.  Flat codes
+    quantize the vector; residual codes quantize ``normalized(vec) −
+    normalized(centroid of its cell)`` (see :func:`train_pq_residual`),
+    a pure JVM ``zip_with`` over a broadcast join with ``cents``."""
+    if not residual:
+        return pq_encode(assigned, vec_col, books, code_col=code_col)
+    cn = F.broadcast(
+        cents.select("cell_id", V.normalized(F.col("centroid")).alias("__cn"))
+    )
+    with_resid = assigned.join(cn, "cell_id").withColumn(
+        "__resid",
+        F.zip_with(V.normalized(F.col(vec_col)), F.col("__cn"), lambda a, b: a - b),
+    )
+    return pq_encode(
+        with_resid, "__resid", books, code_col=code_col, normalize=False
+    ).drop("__resid", "__cn")
 
 
 def ivf_pq_append_index(
@@ -561,39 +563,12 @@ def ivf_pq_append_index(
     NEW data only, never a rebuild.  Exactness at full probe/rescore is
     unaffected (the final stage re-scores true cosine on raw vectors).
     """
-    from paradump_spark.operators import similarity as SIM
-
     cents = spark.read.parquet(f"{path}/centroids")
     books = load_codebooks(spark, f"{path}/pq_codebooks")
-    try:
-        residual = bool(
-            spark.read.parquet(f"{path}/index_meta").collect()[0]["residual"]
-        )
-    except Exception:  # pre-residual index layout: flat codes
-        residual = False
-    n_new = new_corpus.count()  # meta bump after the append, see below
+    residual = SIM._index_meta(spark, path)[0]  # legacy layout: flat codes
     assigned = SIM.ivf_assign(new_corpus, cents, id_col, vec_col)
-    if residual:
-        cn = F.broadcast(
-            cents.select(
-                "cell_id", V.normalized(F.col("centroid")).alias("__cn")
-            )
-        )
-        with_resid = assigned.join(cn, "cell_id").withColumn(
-            "__resid",
-            F.zip_with(
-                V.normalized(F.col(vec_col)), F.col("__cn"), lambda a, b: a - b
-            ),
-        )
-        encoded = pq_encode(
-            with_resid, "__resid", books, code_col=code_col, normalize=False
-        ).drop("__resid", "__cn")
-    else:
-        encoded = pq_encode(assigned, vec_col, books, code_col=code_col)
-    encoded.repartition(F.col("cell_id")).write.mode("append").partitionBy(
-        "cell_id"
-    ).parquet(f"{path}/corpus")
-    SIM._bump_index_meta(spark, path, n_new)
+    encoded = _encode_cells(assigned, cents, vec_col, books, residual, code_col)
+    SIM._bump_index_meta(spark, path, SIM._write_cells(encoded, path, "append"))
 
 
 def ivf_pq_query_index(
@@ -627,19 +602,19 @@ def ivf_pq_query_index(
     ``max_broadcast_queries``; past that the scoring join becomes a
     shuffle equi-join on ``cell_id`` — the cell id is the blocking key,
     so a million-query batch co-partitions with the probed corpus cells
-    instead of collecting on the driver or overflowing a broadcast."""
+    instead of collecting on the driver or overflowing a broadcast.
+
+    Each query's ``nprobe`` cells come from the map-side top-p kernel
+    over the collected centroid table, as in
+    `similarity.ivf_query_index`.  A query whose vector is NULL or not
+    as wide as the centroids gets no rows; it never fails the search."""
     qid = query_id_col or id_col
     books = load_codebooks(spark, f"{path}/pq_codebooks")
     cents = spark.read.parquet(f"{path}/centroids")
-    ksub = books.ksub
+    rows = cents.collect()
     if nprobe is None or rescore is None:
-        from paradump_spark.operators.similarity import (
-            derive_search_budget,
-            index_row_count,
-        )
-
-        budget = derive_search_budget(
-            index_row_count(spark, path), cents.count(), k
+        budget = SIM.derive_search_budget(
+            SIM.index_row_count(spark, path), len(rows), k
         )
         nprobe = budget["nprobe"] if nprobe is None else nprobe
         rescore = budget["rescore"] if rescore is None else rescore
@@ -649,103 +624,37 @@ def ivf_pq_query_index(
         F.col(qid).alias("query_id"), F.col(vec_col)
     ).localCheckpoint(eager=True)
     broadcast_q = qsrc.count() <= max_broadcast_queries
-    try:
-        residual = bool(
-            spark.read.parquet(f"{path}/index_meta").collect()[0]["residual"]
-        )
-    except Exception:  # pre-residual index layout: flat codes
-        residual = False
-
-    q = qsrc.select("query_id", F.col(vec_col).alias("__qv"))
-    # centroids broadcast (≤ num_cells rows); the QUERY side streams —
-    # broadcasting it too would cap Q at the broadcast limit for no gain
-    qcells = (
-        q.crossJoin(F.broadcast(cents))
-        .select(
+    probes = SIM._probe(qsrc, "query_id", vec_col, rows, nprobe)
+    corpus = spark.read.parquet(f"{path}/corpus").where(
+        F.col("cell_id").isin(SIM._probed_cells(probes))
+    )
+    adc = _adc_score(books, code_col)
+    if SIM._index_meta(spark, path)[0]:
+        # residual codes: score = q·ĉ(cell) + q·r̂ (the LUT part); the
+        # per-(query, cell) offset is the JVM cosine of the query and its
+        # probed centroid
+        probes = probes.join(F.broadcast(cents), "cell_id").select(
             "query_id",
             "cell_id",
-            # == dot(normalized q, normalized centroid): doubles as the
-            # per-(query, cell) ADC offset for residual-encoded indexes
-            V.cosine(F.col("__qv"), F.col("centroid")).alias("__ccos"),
+            V.cosine(F.col("__qv"), F.col("centroid")).alias("__coff"),
         )
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("__ccos").desc(), F.col("cell_id").asc()
-    )
-    probes = (
-        qcells.withColumn("__pr", F.row_number().over(wq))
-        .where(F.col("__pr") <= nprobe)
-        .select("query_id", "cell_id", F.col("__ccos").alias("__coff"))
-    )
+        adc = adc + F.col("__coff")
+    else:
+        probes = probes.select("query_id", "cell_id")
     luts = query_luts(qsrc, "query_id", vec_col, books)
     if broadcast_q:
         # see pq_adc_topk: broadcast plain rows, keep the probe plan JVM
         luts = luts.localCheckpoint(eager=True)
-    cells = sorted(
-        {r["cell_id"] for r in probes.select("cell_id").distinct().collect()}
-    )
-    corpus = spark.read.parquet(f"{path}/corpus").where(
-        F.col("cell_id").isin(cells)
-    )
-    pos = F.sequence(F.lit(0), F.lit(books.m - 1))
-    score = F.aggregate(
-        pos,
-        F.lit(0.0),
-        lambda acc, s: acc
-        + F.element_at(
-            F.col("__lut"),
-            s * ksub + F.element_at(F.col(code_col), s + 1) + 1,
-        ),
-    )
     plan = probes.join(luts, "query_id")
     if broadcast_q:
         plan = F.broadcast(plan)
-    scored = (
-        plan.join(corpus, "cell_id")
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col),
-            "__lut",
-            code_col,
-            "__coff",
-        )
-        # residual index: score = q·ĉ(cell) + q·r̂ (LUT part); flat: LUT only
-        .withColumn("__adc", (score + F.col("__coff")) if residual else score)
-        # project the LUT array and the spent code OUT before the
-        # candidate-cut windows (same §2.3 fix as pq_adc_topk: the lut
-        # is ksub·m doubles per row and nothing downstream reads it)
-        .select("query_id", "neighbor_id", vec_col, "__adc")
-    )
-    part = partial_topk(
-        scored,
-        ["query_id"],
-        [F.col("__adc").desc(), F.col("neighbor_id").asc()],
-        rescore,
-    )
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("__adc").desc(), F.col("neighbor_id").asc()
-    )
-    cands = (
-        part.withColumn("__r", F.row_number().over(wr))
-        .where(F.col("__r") <= rescore)
-        .drop("__r", "__adc")
-    )
-    qn = qsrc.select(
-        "query_id", V.normalized(F.col(vec_col)).alias("__qn")
-    )
-    if broadcast_q:
-        qn = F.broadcast(qn)
-    exact = cands.join(qn, "query_id").select(
+    # the LUT array and the spent code are projected OUT before the
+    # candidate cut (same fix as pq_adc_topk: the lut is ksub·m doubles
+    # per row and nothing downstream reads it)
+    scored = plan.join(corpus, "cell_id").select(
         "query_id",
-        "neighbor_id",
-        V.dot(F.col("__qn"), V.normalized(F.col(vec_col))).alias("cosine"),
+        F.col(id_col).alias("neighbor_id"),
+        vec_col,
+        adc.alias("__adc"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cosine", 6).alias("cosine"))
-    )
+    return _rescore(scored, qsrc, vec_col, k, rescore, broadcast_q)

@@ -21,10 +21,10 @@ from __future__ import annotations
 
 from typing import Mapping, Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from paradump_spark.plans.topk import partial_topk
+from paradump_spark.plans.topk import partial_topk, top_n
 
 #: Bucket modulus. 1e6 buckets keeps weight quantization error ≤ 1e-6.
 DENOM = 1_000_000
@@ -192,6 +192,11 @@ def mixture_plan(
     )
 
 
+def _sample_order(id_col: str, seed: str) -> list[Column]:
+    """The total (hash bucket, id) order a per-group sample keeps."""
+    return [hash_bucket(F.col(id_col), seed).asc(), F.col(id_col).asc()]
+
+
 def group_top_k_partial(
     df: DataFrame,
     group_cols: Sequence[str],
@@ -210,10 +215,7 @@ def group_top_k_partial(
     global top-k (per-partition top-k union always contains it) with at
     most ``k × input_partitions`` rows per group.
     """
-    bucket = hash_bucket(F.col(id_col), seed)
-    return partial_topk(
-        df, list(group_cols), [bucket.asc(), F.col(id_col).asc()], k
-    )
+    return partial_topk(df, list(group_cols), _sample_order(id_col, seed), k)
 
 
 def group_top_k(
@@ -228,8 +230,9 @@ def group_top_k(
     the balanced-mix primitive ("k docs per language/source"), stable
     across engines and runs.
 
-    Skew-safe two-stage plan: :func:`group_top_k_partial` first cuts each
-    group to ≤ ``k × input_partitions`` candidates with a window keyed on
+    Skew-safe two-stage plan (`plans.topk.top_n`): the cut of
+    :func:`group_top_k_partial` first brings each group to ≤ ``k ×
+    input_partitions`` candidates with a window keyed on
     ``(spark_partition_id, group)`` — one full-data shuffle whose keys
     spread hot groups over all partitions — then the global ``row_number``
     window ranks only the surviving candidates, so the per-group task that
@@ -241,12 +244,6 @@ def group_top_k(
     DuckDB spelling (partitioning-free, same result): ``row_number()
     OVER (PARTITION BY g ORDER BY <hash_bucket sql>, id) <= k``.
     """
-    candidates = group_top_k_partial(df, group_cols, id_col, k, seed)
-    w = Window.partitionBy(*group_cols).orderBy(
-        hash_bucket(F.col(id_col), seed).asc(), F.col(id_col).asc()
-    )
-    return (
-        candidates.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k)
-        .drop("__rn")
-    )
+    return top_n(
+        df, list(group_cols), _sample_order(id_col, seed), k, "__rn"
+    ).drop("__rn")

@@ -13,10 +13,22 @@ Beyond-reference surface.  Two physical strategies:
   read of ~nprobe/C of the data if the corpus table is written
   bucketed/partitioned by cell id.
 
-Every nearest-centroid and per-cell scoring step runs through one numpy
-kernel, :func:`top_p`, in a map-side and a cogrouped form;
-:func:`brute_force_topk` stays pure JVM as the reference it is checked
-against.
+Every search shares three steps, each written once:
+
+* **probe** — every nearest-centroid and per-cell scoring step runs
+  through one numpy kernel, :func:`top_p`, in a map-side
+  (:func:`_top_p_map`: cell assignment and each query's ``nprobe``
+  cells) and a cogrouped form (:func:`_top_p_cogroup`);
+* **rank** — each query's top k is `plans.topk.top_n` (a partial cut,
+  then a bounded global ``row_number``), and :func:`_neighbors` emits
+  the public (query_id, neighbor_id, rank, cosine) shape;
+* **index layout** — this module alone knows the stored index: the
+  corpus written partitioned by ``cell_id`` (:func:`_write_cells`) and
+  the one-row ``index_meta`` (:func:`write_index_meta`,
+  :func:`_index_meta`).
+
+:func:`brute_force_topk` stays pure JVM as the reference the kernels are
+checked against; it shares only the rank step.
 """
 
 from __future__ import annotations
@@ -36,7 +48,7 @@ from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from paradump_spark.functions import vectors as V
 from paradump_spark.operators.dedup import spread
-from paradump_spark.plans.topk import partial_topk
+from paradump_spark.plans.topk import top_n
 
 log = logging.getLogger("paradump_spark")
 
@@ -67,19 +79,19 @@ def brute_force_topk(
         "neighbor_id",
         V.dot(F.col("__qv"), F.col("__cv")).alias("cosine"),
     )
-    # skew-safe: cut each query to ≤ k rows per input partition before
-    # the global ranking, so the per-query task never receives the whole
-    # scored corpus (identical result — (cosine, id) is a total order)
-    cand = partial_topk(
-        scored, ["query_id"], [F.col("cosine").desc(), F.col("neighbor_id").asc()], k
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cosine", 6).alias("cosine"))
+    return _neighbors(scored, k)
+
+
+def _neighbors(scored: DataFrame, k: int, bounded: bool = False) -> DataFrame:
+    """The public search result from (query_id, neighbor_id, cosine)
+    rows: each query's top ``k`` by (cosine desc, neighbor_id asc) — a
+    total order — as (query_id, neighbor_id, rank, cosine rounded to 6
+    places).  The rank is skew-safe (`plans.topk.top_n`): the per-query
+    task never receives the whole scored corpus.  ``bounded``: ``scored``
+    already holds few rows per query, so one window ranks them."""
+    order = [F.col("cosine").desc(), F.col("neighbor_id").asc()]
+    return top_n(scored, ["query_id"], order, k, bounded=bounded).select(
+        "query_id", "neighbor_id", "rank", F.round("cosine", 6).alias("cosine")
     )
 
 
@@ -442,31 +454,37 @@ def ivf_build_index(
     centroids before assignment (better-balanced cells, higher recall at
     the same nprobe).
     """
-    from pyspark.sql import Observation
-
     cents = ivf_centroids(corpus, id_col, vec_col, num_cells, seed)
     if refine_iters:
         cents = kmeans_refine(
             corpus, cents, id_col, vec_col, refine_iters,
             train_cap=train_cap, seed=seed,
         )
-    assigned = ivf_assign(corpus, cents, id_col, vec_col)
-    # the stored row count (auto search budgets) rides the write job as
-    # an Observation — round 7 re-read the freshly written corpus and
-    # count()ed it, a whole extra job + parquet listing per build
-    # (VERDICT r07 directive 3: ivf_build_refined +63% at sf0.1)
-    obs = Observation()
-    assigned = assigned.observe(obs, F.count(F.lit(1)).alias("n_rows"))
-    # Cluster by cell before the partitioned write: without this every
-    # input task writes one file per cell it touches (tasks × cells tiny
-    # files — at cluster scale, millions); one hash shuffle on cell_id
-    # makes each task own whole cells, so file count ≈ max(num_cells,
-    # shuffle partitions) with row groups big enough to scan well.
-    assigned.repartition(F.col("cell_id")).write.mode("overwrite").partitionBy(
-        "cell_id"
-    ).parquet(f"{path}/corpus")
+    n_rows = _write_cells(ivf_assign(corpus, cents, id_col, vec_col), path)
     cents.write.mode("overwrite").parquet(f"{path}/centroids")
-    write_index_meta(corpus.sparkSession, path, n_rows=obs.get["n_rows"])
+    write_index_meta(corpus.sparkSession, path, n_rows=n_rows)
+
+
+def _write_cells(assigned: DataFrame, path: str, mode: str = "overwrite") -> int:
+    """Write ``assigned`` (rows + ``cell_id``) as the index corpus,
+    partitioned by ``cell_id`` so probes become partition-pruned scans;
+    returns the number of rows written.
+
+    The count rides the write job as an Observation — re-reading the
+    freshly written corpus to count it is a whole extra job + parquet
+    listing per build.  Rows are clustered by cell before the write:
+    without that every input task writes one file per cell it touches
+    (tasks × cells tiny files — at cluster scale, millions); one hash
+    shuffle on cell_id makes each task own whole cells, so file count ≈
+    max(num_cells, shuffle partitions) with row groups big enough to
+    scan well."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    assigned.observe(obs, F.count(F.lit(1)).alias("n_rows")).repartition(
+        F.col("cell_id")
+    ).write.mode(mode).partitionBy("cell_id").parquet(f"{path}/corpus")
+    return obs.get["n_rows"]
 
 
 def write_index_meta(spark, path: str, n_rows: int, residual: bool = False) -> None:
@@ -525,18 +543,25 @@ def _resolves_driver_local(spark, path: str) -> bool:
     return fs is None or fs.startswith("file:")
 
 
+def _index_meta(spark, path: str) -> tuple[bool, int | None]:
+    """``(residual, n_rows)`` from the index's ``index_meta``: the
+    IVF-PQ residual-encoding flag and the stored row count.  An index
+    without a meta (a legacy layout) reads as ``(False, None)``, and a
+    meta from before the count was recorded gives ``n_rows`` None."""
+    try:
+        row = spark.read.parquet(f"{path}/index_meta").collect()[0]
+    except Exception:
+        return False, None
+    n = row["n_rows"] if "n_rows" in row.__fields__ else None
+    return bool(row["residual"]), None if n is None else int(n)
+
+
 def index_row_count(spark, path: str) -> int:
     """Stored row count from ``index_meta``; legacy indexes (or metas
     from before the count was recorded) fall back to counting the
     corpus."""
-    try:
-        row = spark.read.parquet(f"{path}/index_meta").collect()[0]
-        n = row["n_rows"] if "n_rows" in row.__fields__ else None
-        if n is not None:
-            return int(n)
-    except Exception:
-        pass
-    return spark.read.parquet(f"{path}/corpus").count()
+    n = _index_meta(spark, path)[1]
+    return spark.read.parquet(f"{path}/corpus").count() if n is None else n
 
 
 def _bump_index_meta(spark, path: str, n_new: int) -> None:
@@ -554,14 +579,7 @@ def _bump_index_meta(spark, path: str, n_new: int) -> None:
     partitioned parquet append itself has the same single-writer
     contract).  If a race is suspected, delete ``index_meta`` — the
     next append recounts the corpus and heals the stored count."""
-    residual, old = False, None
-    try:
-        row = spark.read.parquet(f"{path}/index_meta").collect()[0]
-        residual = bool(row["residual"])
-        if "n_rows" in row.__fields__ and row["n_rows"] is not None:
-            old = int(row["n_rows"])
-    except Exception:
-        pass
+    residual, old = _index_meta(spark, path)
     if old is None:  # legacy: corpus already contains the new rows
         n_total = spark.read.parquet(f"{path}/corpus").count()
     else:
@@ -595,14 +613,10 @@ def ivf_append_index(
     count are single-writer (see :func:`_bump_index_meta`).
     """
     cents = spark.read.parquet(f"{path}/centroids")
-    # counted up front (one pass over the NEW rows only) so the meta
-    # update after the append never re-scans the whole index
-    n_new = new_corpus.count()
+    # the write counts the NEW rows, so the meta update after the append
+    # never re-scans the whole index
     assigned = ivf_assign(new_corpus, cents, id_col, vec_col)
-    assigned.repartition(F.col("cell_id")).write.mode("append").partitionBy(
-        "cell_id"
-    ).parquet(f"{path}/corpus")
-    _bump_index_meta(spark, path, n_new)
+    _bump_index_meta(spark, path, _write_cells(assigned, path, "append"))
 
 
 def ivf_query_index(
@@ -616,44 +630,27 @@ def ivf_query_index(
     query_id_col: str | None = None,
 ) -> DataFrame:
     """Search a materialized IVF index: pick each query's ``nprobe``
-    nearest cells (vs the tiny centroid table), then scan ONLY those
-    partitions of the stored corpus.
+    nearest cells (the map-side :func:`top_p` kernel over the collected
+    centroid table), then scan ONLY those partitions of the stored
+    corpus.
 
     ``nprobe=None`` (the default) derives the probe budget from the
     index's CURRENT row/cell counts via :func:`derive_search_budget`,
     so an index grown by appends keeps its recall instead of silently
     searching at build-time budgets (VERDICT r06 directive 4).
+
+    A query whose vector is NULL or not as wide as the centroids gets
+    no rows; it never fails the search.
     """
     qid = query_id_col or id_col
-    cents = spark.read.parquet(f"{path}/centroids")
+    rows = spark.read.parquet(f"{path}/centroids").collect()
     if nprobe is None:
         nprobe = derive_search_budget(
-            index_row_count(spark, path), cents.count(), k
+            index_row_count(spark, path), len(rows), k
         )["nprobe"]
-    q = queries.select(F.col(qid).alias("query_id"), F.col(vec_col).alias("__qv"))
-    qcells = (
-        F.broadcast(q)
-        .crossJoin(F.broadcast(cents))
-        .select(
-            "query_id",
-            "__qv",
-            "cell_id",
-            V.cosine(F.col("__qv"), F.col("centroid")).alias("__ccos"),
-        )
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("__ccos").desc(), F.col("cell_id").asc()
-    )
-    probes = (
-        qcells.withColumn("__pr", F.row_number().over(wq))
-        .where(F.col("__pr") <= nprobe)
-        .select("query_id", "__qv", "cell_id")
-    )
-    # the union of probed cells is tiny (≤ queries × nprobe ≤ num_cells);
-    # an IN-list literal on the partition column prunes the scan
-    cells = sorted({r["cell_id"] for r in probes.select("cell_id").distinct().collect()})
+    probes = _probe(queries, qid, vec_col, rows, nprobe)
     corpus = spark.read.parquet(f"{path}/corpus").where(
-        F.col("cell_id").isin(cells)
+        F.col("cell_id").isin(_probed_cells(probes))
     )
     scored = (
         F.broadcast(probes)
@@ -664,17 +661,23 @@ def ivf_query_index(
             V.cosine(F.col("__qv"), F.col(vec_col)).alias("cosine"),
         )
     )
-    cand = partial_topk(
-        scored, ["query_id"], [F.col("cosine").desc(), F.col("neighbor_id").asc()], k
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cosine", 6).alias("cosine"))
-    )
+    return _neighbors(scored, k)
+
+
+def _probe(queries: DataFrame, qid: str, vec_col: str, rows, nprobe: int) -> DataFrame:
+    """(query_id, __qv, cell_id): each query once per its ``nprobe``
+    nearest of the collected centroid ``rows`` (:func:`_top_p_map`; ties
+    to the lowest cell_id).  A NULL or ragged query vector gets no
+    probe, so its search finds no rows."""
+    q = queries.select(F.col(qid).alias("query_id"), F.col(vec_col).alias("__qv"))
+    return _top_p_map(q, rows, "__qv", nprobe).where(F.col("cell_id").isNotNull())
+
+
+def _probed_cells(probes: DataFrame) -> list:
+    """The sorted union of probed cells — tiny (≤ queries × nprobe ≤
+    num_cells): an IN-list literal on the partition column prunes the
+    corpus scan."""
+    return sorted(r["cell_id"] for r in probes.select("cell_id").distinct().collect())
 
 
 def ivf_topk(
@@ -699,6 +702,11 @@ def ivf_topk(
     query paths' default); the explicit ``4`` default is kept here
     because this ad-hoc path is the declared rows-only bench query and
     its recall/latency point must stay comparable across rounds.
+
+    The centroid table is collected once and feeds both the corpus
+    assignment and the query probe.  A query whose vector is NULL or
+    not as wide as the centroids gets no rows; it never fails the
+    search.
     """
     qid = query_id_col or id_col
     if nprobe is None:
@@ -706,43 +714,17 @@ def ivf_topk(
     cents = ivf_centroids(corpus, id_col, vec_col, num_cells)
     if refine_iters:
         cents = kmeans_refine(corpus, cents, id_col, vec_col, refine_iters)
-    assigned = ivf_assign(corpus, cents, id_col, vec_col).select(
+    rows = cents.collect()
+    assigned = _top_p_map(corpus, rows, vec_col, 1).select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv"), "cell_id"
     )
-    # nprobe nearest cells per query (tiny: |queries| × num_cells).
-    q = queries.select(F.col(qid).alias("query_id"), F.col(vec_col).alias("__qv"))
-    qcells = (
-        F.broadcast(q)
-        .crossJoin(F.broadcast(cents))
-        .select(
-            "query_id",
-            "__qv",
-            "cell_id",
-            V.cosine(F.col("__qv"), F.col("centroid")).alias("__ccos"),
-        )
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("__ccos").desc(), F.col("cell_id").asc()
-    )
-    probes = qcells.withColumn("__pr", F.row_number().over(wq)).where(
-        F.col("__pr") <= nprobe
-    ).select("query_id", "__qv", "cell_id")
+    probes = _probe(queries, qid, vec_col, rows, nprobe)
     scored = F.broadcast(probes).join(assigned, "cell_id").select(
         "query_id",
         "neighbor_id",
         V.cosine(F.col("__qv"), F.col("__cv")).alias("cosine"),
     )
-    cand = partial_topk(
-        scored, ["query_id"], [F.col("cosine").desc(), F.col("neighbor_id").asc()], k
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cosine", 6).alias("cosine"))
-    )
+    return _neighbors(scored, k)
 
 
 def ann_recall(
@@ -841,12 +823,7 @@ def ivf_rebuild_index(
     Returns a report dict (cells split, max share before/after).
     """
     corpus_path = f"{path}/corpus"
-    residual = False
-    try:
-        meta = spark.read.parquet(f"{path}/index_meta").collect()
-        residual = bool(meta and meta[0]["residual"])
-    except Exception:  # pre-meta plain-IVF layout
-        pass
+    residual = _index_meta(spark, path)[0]
     books = None
     if residual:  # split cells re-encode with the frozen codebooks
         from paradump_spark.operators.pq import load_codebooks
@@ -902,34 +879,14 @@ def ivf_rebuild_index(
         assigned = ivf_assign(cell_df, sub, id_col, vec_col)
         if residual:
             # codes encode normalized(vec) − normalized(old centroid);
-            # recompute the residual against the NEW sub-centroid and
-            # re-encode with the frozen codebooks (same JVM zip_with +
-            # encode pass the build/append paths use).
-            from paradump_spark.operators.pq import pq_encode
+            # re-encode against the NEW sub-centroid with the frozen
+            # codebooks (the build/append paths' encode)
+            from paradump_spark.operators.pq import _encode_cells
 
-            cn = F.broadcast(
-                sub.select(
-                    "cell_id", V.normalized(F.col("centroid")).alias("__cn")
-                )
+            assigned = _encode_cells(
+                assigned.drop("pq_code"), sub, vec_col, books, residual=True
             )
-            assigned = (
-                assigned.drop("pq_code")
-                .join(cn, "cell_id")
-                .withColumn(
-                    "__resid",
-                    F.zip_with(
-                        V.normalized(F.col(vec_col)),
-                        F.col("__cn"),
-                        lambda a, b: a - b,
-                    ),
-                )
-            )
-            assigned = pq_encode(
-                assigned, "__resid", books, normalize=False
-            ).drop("__resid", "__cn")
-        assigned.repartition(F.col("cell_id")).write.mode("append").partitionBy(
-            "cell_id"
-        ).parquet(corpus_path)
+        _write_cells(assigned, path, "append")
         new_cent_frames.append(sub)
         report["split_cells"].append(
             {"cell_id": c, "n": counts[c], "new_ids": list(range(next_id, next_id + split_factor))}
@@ -1115,7 +1072,7 @@ def knn_join(
     with the :func:`top_p` kernel (one numpy matmul, per-query top-k
     inside the kernel, so at most k rows per (query, probed cell) leave
     it); per-query top-k then goes through the skew-safe
-    `plans.topk.partial_topk` cut before the final ranking window.  No
+    `plans.topk.top_n` rank (partial cut, then the final window).  No
     cartesian anywhere; at ``nprobe == num_cells`` the result is EXACT
     (every cell probed — equals :func:`brute_force_topk`, the JVM
     reference, test-asserted).
@@ -1150,7 +1107,7 @@ def knn_join(
     fine kernel: O(N·√cells·d) total); queries probe ``coarse_probe``
     coarse cells, rank the fine centroids inside them (the cogrouped
     :func:`top_p` kernel, per-coarse top-``nprobe``), and keep the global
-    top-``nprobe`` fine cells via the skew-safe partial_topk cut.  At
+    top-``nprobe`` fine cells via the skew-safe `plans.topk.top_n`.  At
     ``coarse_probe == coarse_cells`` and ``nprobe == num_cells`` every
     fine cell is probed — EXACT (test-asserted equal to the flat exact
     path).  A neighbor is findable iff its fine cell is probed AND that
@@ -1265,18 +1222,10 @@ def knn_join(
             ]),
             _emit_pairs("query_id", "cell_id", "__fs"),
         )
-        q = partial_topk(
+        q = top_n(
             q, ["query_id"],
-            [F.col("__fs").desc(), F.col("cell_id").asc()], nprobe,
-        )
-        wf = Window.partitionBy("query_id").orderBy(
-            F.col("__fs").desc(), F.col("cell_id").asc()
-        )
-        q = (
-            q.withColumn("__fr", F.row_number().over(wf))
-            .where(F.col("__fr") <= nprobe)
-            .select("cell_id", "query_id")
-        )
+            [F.col("__fs").desc(), F.col("cell_id").asc()], nprobe, "__fr",
+        ).select("cell_id", "query_id")
         # re-attach the query vector with ONE keyed join: the join
         # shuffles each query vector once
         qvec = left.select(F.col(lid).alias("query_id"), q_vec)
@@ -1320,17 +1269,7 @@ def knn_join(
         _emit_pairs("query_id", "neighbor_id", "cosine"),
         exclude_key="query_id" if exclude_self else None,
     )
-    cand = partial_topk(
-        scored, ["query_id"], [F.col("cosine").desc(), F.col("neighbor_id").asc()], k
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cosine", 6).alias("cosine"))
-    )
+    return _neighbors(scored, k)
 
 
 def knn_graph_clusters(

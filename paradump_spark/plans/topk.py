@@ -1,4 +1,4 @@
-"""Skew-safe per-key top-n: the partial-cut building block.
+"""Skew-safe per-key top-n: a partial cut, then a bounded global rank.
 
 A global ``row_number() OVER (PARTITION BY key ORDER BY ...)`` funnels
 every row of a key through one task — for hot keys (one query scored
@@ -12,7 +12,7 @@ input_partitions`` per key, a SUPERSET of the global top-n (each
 partition's local top-n contains every global winner that lives in that
 partition) — so a second, now-bounded global ranking gives a result
 identical to the naive single-window plan whenever ``order_by`` is a
-total order.
+total order.  :func:`top_n` is that pair, written once.
 """
 
 from __future__ import annotations
@@ -40,4 +40,25 @@ def partial_topk(
         .withColumn("__ptk", F.row_number().over(w))
         .where(F.col("__ptk") <= n)
         .drop("__pid", "__ptk")
+    )
+
+
+def top_n(
+    df: DataFrame,
+    key_cols: Sequence[str],
+    order_by: Sequence[Column],
+    n: int,
+    rank_col: str = "rank",
+    bounded: bool = False,
+) -> DataFrame:
+    """Each key's top-``n`` rows by ``order_by`` (a total order), numbered
+    1..n in ``rank_col``: the :func:`partial_topk` cut, then a global
+    ``row_number`` over the survivors — equal to the naive single
+    window.  ``bounded=True`` skips the cut, for an input that already
+    holds few rows per key: one window and no further exchange."""
+    if not bounded:
+        df = partial_topk(df, key_cols, order_by, n)
+    w = Window.partitionBy(*key_cols).orderBy(*order_by)
+    return df.withColumn(rank_col, F.row_number().over(w)).where(
+        F.col(rank_col) <= n
     )

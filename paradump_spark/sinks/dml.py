@@ -146,26 +146,6 @@ def apply_diff(
     classified.foreachPartition(run_partition)
 
 
-def write_jdbc(
-    df: DataFrame,
-    url: str,
-    table: str,
-    properties: dict[str, str],
-    batch_size: int = 500,
-    dialect: str = "mysql",
-    suppress_pg_triggers: bool = False,
-) -> None:
-    """K5 zero-code path: ``df.write.jdbc`` append with the reference's
-    batching knobs — insertsize batching (:3490), MSSQL 2100-parameter
-    clamp (:3729-3734), optional PG ``session_replication_role=replica``
-    to suppress destination triggers (:543)."""
-    props = dict(properties)
-    props["batchsize"] = str(clamp_batch_size(batch_size, len(df.columns), dialect))
-    if suppress_pg_triggers and dialect == "postgres":
-        props["sessionInitStatement"] = "SET session_replication_role = replica"
-    df.write.jdbc(url=url, table=table, mode="append", properties=props)
-
-
 def copy_table(
     df: DataFrame,
     connection_factory: Callable[[], object],

@@ -36,6 +36,7 @@ import threading
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from paradump_spark.functions.render import csv_line, values_tuple
 from paradump_spark.meta import TableMeta
@@ -254,7 +255,10 @@ def write_csv(
     when needed, ``\\N`` NULL for quoted kinds, empty for others,
     trimmed fractional seconds) via one codegen'd expression per row.
     ``exact=False`` uses Spark's native CSV writer (faster; NULL
-    convention is global ``\\N``, not per-kind).
+    convention is global ``\\N``, not per-kind).  That writer rejects
+    ARRAY, MAP and STRUCT columns, so they are cast to string first:
+    the cell text ``exact=True`` writes, quoted as the writer quotes
+    any string.
     """
     if partitions:
         df = df.repartition(partitions)
@@ -267,6 +271,14 @@ def write_csv(
             out.write.mode(mode), out, path, compression, compression_level, "text"
         )
         return
+    nested = (T.ArrayType, T.MapType, T.StructType)
+    as_text = {
+        f.name: F.col(f.name).cast("string")
+        for f in df.schema.fields
+        if isinstance(f.dataType, nested)
+    }
+    if as_text:
+        df = df.withColumns(as_text)
     writer = (
         df.write.mode(mode)
         .option("nullValue", "\\N")

@@ -6,17 +6,14 @@ A dump → read-back → diff loop is the standard end-to-end consistency
 check: ``write_csv`` + ``read_csv_dump`` round-trips bit-exactly under
 the same convention (``\\N`` NULL, ``"``-quote/escape), so
 ``operators.diff.diff_classified(src, read_back, pk)`` counting zero DML
-proves the dump complete.  Schema is explicit (from the source table or
-``meta``) — dumps carry no header, and inference at 100 TB means an extra
-full pass.
+proves the dump complete.  Schema is explicit (from the source table):
+dumps carry no header, and inference at 100 TB means an extra full pass.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-
-from paradump_spark.meta import TableMeta
 
 
 def read_csv_dump(
@@ -37,13 +34,6 @@ def read_csv_dump(
         .option("header", "false")
     )
     return reader.csv(path)
-
-
-def schema_from_meta(meta: TableMeta) -> T.StructType:
-    """The Spark schema a dump of ``meta``'s table round-trips through."""
-    return T.StructType(
-        [T.StructField(c.name, c.spark_type, c.nullable) for c in meta.columns]
-    )
 
 
 def read_text_zst(spark: SparkSession, path: str, glob: str = "*.zst") -> DataFrame:

@@ -607,11 +607,13 @@ def _knn_rows(left, right, **kw):
     )
 
 
-def test_top_p_map_null_and_ragged_vectors_become_data(spark, sf_dir):
+def test_top_p_map_null_and_ragged_vectors_become_data(spark, sf_dir, tmp_path):
     """The map-side kernel scores only vectors as wide as the
     centroids: a NULL or ragged vector gets a NULL cell_id from
     ivf_assign, no rows from probe_cells and no rows from (flat)
-    knn_join — as a query or as a neighbor — and never fails the job."""
+    knn_join — as a query or as a neighbor — and never fails the job.
+    A NULL or ragged query gets no rows from ivf_topk, ivf_query_index
+    and ivf_pq_query_index either."""
     corpus = spark.createDataFrame(
         [
             (1, [1.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0]), (3, None),
@@ -634,6 +636,31 @@ def test_top_p_map_null_and_ragged_vectors_become_data(spark, sf_dir):
     mixed = _with_bad_vectors(emb)
     exact = dict(num_cells=4, nprobe=4, coarse_cells=0)
     assert _knn_rows(mixed, mixed, **exact) == _knn_rows(emb, emb, **exact)
+
+    from paradump_spark.operators import pq as PQ
+
+    def rows(search):
+        return [sorted(tuple(r) for r in search(q).collect()) for q in (mixed, emb)]
+
+    for nprobe in (1, 2):
+        got, want = rows(lambda q: SIM.ivf_topk(
+            emb, q, "vec_id", "embedding", k=3, num_cells=4, nprobe=nprobe
+        ))
+        assert got == want and want
+    ivf, ivfpq = str(tmp_path / "ivf"), str(tmp_path / "ivfpq")
+    SIM.ivf_build_index(emb, ivf, "vec_id", "embedding", num_cells=4)
+    got, want = rows(lambda q: SIM.ivf_query_index(
+        spark, ivf, q, "vec_id", "embedding", k=3, nprobe=2
+    ))
+    assert got == want and want
+    PQ.ivf_pq_build_index(
+        emb, ivfpq, "vec_id", "embedding", num_cells=4, m=4, ksub=8,
+        refine_iters=0, residual=True,
+    )
+    got, want = rows(lambda q: PQ.ivf_pq_query_index(
+        spark, ivfpq, q, "vec_id", "embedding", k=3, nprobe=2, rescore=10
+    ))
+    assert got == want and want
 
 
 def test_top_p_cogroup_null_and_ragged_vectors_become_data(spark, sf_dir):
@@ -798,12 +825,7 @@ def test_knn_join_two_level_recall_and_plan(spark, sf_dir):
         coarse_cells=3, coarse_probe=2,
     )
     plan = g._jdf.queryExecution().executedPlan().toString()
-    # at toy coarse sizes (cells × dims < 512) probe_cells takes the
-    # JVM path: a crossJoin against the ONE-ROW broadcast centroid
-    # aggregate (bounded by construction — BroadcastNestedLoopJoin,
-    # never a non-broadcast cartesian); production coarse tables
-    # (√cells ≥ 23 at d=64) always cross the arrow threshold and show
-    # no join at all for the probe
+    # the coarse probe is the map-side top-p kernel: no join at all
     assert "CartesianProduct" not in plan
     from collections import defaultdict
     ranks = defaultdict(list)

@@ -287,22 +287,39 @@ def test_dump_manifest_round_trip_verifies(spark, sf_dir, tmp_path):
 
     cat = ParquetCatalog(spark, sf_dir)
     out = str(tmp_path / "dump")
-    results = dump_tables(cat, out, ["nation", "region"], DumpOptions(mode="csv"))
+    tables = ["nation", "region", "embeddings"]
+    results = dump_tables(cat, out, tables, DumpOptions(mode="csv"))
     mpath = write_manifest(cat, out, results)
 
     ok = verify_dump(cat, mpath)  # source verifies against itself
-    assert ok == {"nation": True, "region": True}
+    assert ok == {"nation": True, "region": True, "embeddings": True}
+
+    # the native csv writer takes the array column as its cast text
+    # ("[0.1, -0.2]"), which parses back to the source vectors
+    (emb,) = [r for r in results if r.table == "embeddings"]
+    back = spark.read.schema("vec_id long, embedding string, label int").csv(
+        emb.path, nullValue="\\N", quote='"', escape='"'
+    )
+    got = {
+        r.vec_id: r.v
+        for r in back.select(
+            "vec_id", F.from_json("embedding", "array<float>").alias("v")
+        ).collect()
+    }
+    src = {r.vec_id: r.embedding for r in cat.load("embeddings").collect()}
+    assert got == src
 
     # corrupted restore: nation with a mutated row
     baddir = str(tmp_path / "restored")
     spark.read.parquet(f"{sf_dir}/nation.parquet").withColumn(
         "n_regionkey", F.col("n_regionkey") + 1
     ).write.parquet(f"{baddir}/nation.parquet")
-    spark.read.parquet(f"{sf_dir}/region.parquet").write.parquet(
-        f"{baddir}/region.parquet"
-    )
+    for t in ("region", "embeddings"):
+        spark.read.parquet(f"{sf_dir}/{t}.parquet").write.parquet(
+            f"{baddir}/{t}.parquet"
+        )
     bad = verify_dump(ParquetCatalog(spark, baddir), mpath)
-    assert bad == {"nation": False, "region": True}
+    assert bad == {"nation": False, "region": True, "embeddings": True}
 
 
 def test_checksum_columns_survive_copy(spark, tmp_path):

@@ -19,7 +19,7 @@ ARROW_ALLOWED = {
     "contamination_bloom",   # numpy bitmap membership probe
     "multimodal_features",   # Arrow-batched feature kernel
     "pq_topk",               # Arrow-batched PQ encode
-    "ivf_topk",              # PQ/IVF build path
+    "ivf_topk",              # Arrow numpy top-p assign and query probe
     "pack_stats",            # stateful per-partition packer
     "embedding_near_dup_lsh",
     "embedding_cluster_report",  # Arrow numpy argmax in ivf_assign
@@ -38,13 +38,13 @@ ARROW_ALLOWED = {
 
 # queries whose plan contains a GLOBAL (unpartitioned) window by design
 # because its input is provably bounded before the window runs: a
-# limit(k) head, per-cell centroid sets (≤ num_cells rows), or a
-# partial_topk cut (≤ n × partitions rows).  Unbounded inputs must use
+# limit(k) head or a partial_topk cut (≤ n × partitions rows).  The
+# centroid tables of the IVF searches are collected and probed map-side,
+# so no centroid window is left in a plan.  Unbounded inputs must use
 # plans/ranking.py (global_row_number / global_ntile) instead.
 GLOBAL_WINDOW_ALLOWED = {
     "vocab_top_tokens",      # window over a limit(k) result
     "ann_topk",              # final rank over a partial_topk cut
-    "ivf_topk",              # centroid ranking over ≤ num_cells rows
     "pq_topk",               # final rank over a partial_topk cut
     "embedding_near_dup",    # pair rank over a bounded candidate set
     "embedding_near_dup_lsh",

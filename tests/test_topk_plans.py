@@ -4,7 +4,7 @@ group_top_k, brute_force_topk, ivf_*_topk and the PQ searches."""
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from paradump_spark.plans.topk import partial_topk
+from paradump_spark.plans.topk import partial_topk, top_n
 
 
 def test_partial_topk_is_superset_and_bounded(spark):
@@ -35,6 +35,16 @@ def test_partial_topk_is_superset_and_bounded(spark):
     assert got == naive
     cut_ids = {(r["key"], r["id"]) for r in cut.collect()}
     assert naive <= cut_ids
+    # top_n (the cut, then the bounded global rank) equals the naive
+    # single window, ranks included
+    for n in (1, 10):
+        want = sorted(
+            tuple(r)
+            for r in df.withColumn("rank", F.row_number().over(w))
+            .where(F.col("rank") <= n)
+            .collect()
+        )
+        assert sorted(tuple(r) for r in top_n(df, ["key"], order, n).collect()) == want
 
 
 def test_ann_candidate_windows_are_two_stage(spark, sf_dir):
